@@ -365,10 +365,10 @@ object Bench {
     // or the driver records "parsed": null — rounds 3 and 4 lost their
     // bench numbers exactly this way once the query count outgrew the
     // window. The full per-query map is written to BENCH_DETAIL.json
-    // (and echoed one log line above); the summary line carries the
-    // slowest queries that fit a fixed character budget — the ones a
-    // plan audit cares about — plus `n_queries` so the truncation is
-    // explicit, never silent.
+    // (echoed to stdout only when that write fails); the summary line
+    // carries the slowest queries that fit a fixed character budget —
+    // the ones a plan audit cares about — plus `n_queries` so the
+    // truncation is explicit, never silent.
     val fullQs = ok.sortBy(_._1).map { case (k, v) => "\"" + k + f"\":$v%.3f" }
       .mkString("{", ",", "}")
     val fullLine =

@@ -25,7 +25,8 @@ import java.time.Instant
   * per-request clustering):
   *  - POST /api/clusters/{id}/pyramid {"zMin":a,"zMax":b}  → build+persist
   *  - GET  /api/clusters/{id}/pyramid?zoom&…      → GeoJSON from the
-  *    persisted pyramid (pure zoom-pruned scan)
+  *    persisted pyramid (pure zoom-pruned scan); it and
+  *    `…/pyramid/metadata` answer 404 until a pyramid is built
   *
   * Bounds arrive as north/south/east/west floats (main.go:28-55); the
   * most recent dataset is the initial default (main.go:70-72). CORS `*`
@@ -94,12 +95,24 @@ final class RestServer(engine: ClusterEngine, port: Int = 0,
   private def jnum(d: Double): String =
     if (d == d.toLong.toDouble) d.toLong.toString else d.toString
 
-  /** "value:ppm,value:ppm" canonical string → JSON object. */
+  /** "value:ppm,value:ppm" canonical string → JSON object; the empty
+    * distribution of a viewport with no points is `{}`.
+    */
   private def distToJson(dist: String): String =
-    dist.split(",").map { kv =>
+    dist.split(",").filter(_.nonEmpty).map { kv =>
       val i = kv.lastIndexOf(':')
       s"${jstr(kv.substring(0, i))}:${kv.substring(i + 1)}"
     }.mkString("{", ",", "}")
+
+  /** The summary's three counts. They are sums, null over a viewport
+    * with no points, where they read 0.
+    */
+  private def totalsJson(row: org.apache.spark.sql.Row): String =
+    Seq("totalPoints" -> "total_points", "numClusters" -> "num_clusters",
+      "numSinglePoints" -> "num_single_points").map { case (k, c) =>
+      val i = row.fieldIndex(c)
+      s"${jstr(k)}:${if (row.isNullAt(i)) 0L else row.getLong(i)}"
+    }.mkString(",")
 
   private def infoJson(i: graft.sources.Catalog#SavedInfo): String =
     s"""{"id":${jstr(i.id)},"numPoints":${i.numPoints},""" +
@@ -178,7 +191,8 @@ final class RestServer(engine: ClusterEngine, port: Int = 0,
           schema.filter(_.endsWith("_dist")).map { c =>
             s"${jstr(c.stripSuffix("_dist"))}:${distToJson(row.getAs[String](c))}"
           } ++
-          schema.filter(c => c.endsWith("_earliest")).map { c =>
+          // a viewport with no points has no time range
+          schema.filter(c => c.endsWith("_earliest") && !row.isNullAt(row.fieldIndex(c))).map { c =>
             val base = c.stripSuffix("_earliest")
             s"${jstr(base)}:{" +
               s""""Earliest":${jstr(row.getAs[java.sql.Timestamp](c).toInstant.toString)},""" +
@@ -192,9 +206,7 @@ final class RestServer(engine: ClusterEngine, port: Int = 0,
               s""""Average":${jnum(row.getAs[Double](c))}}"""
           }
         respond(ex, 200,
-          s"""{"totalPoints":${row.getAs[Long]("total_points")},""" +
-            s""""numClusters":${row.getAs[Long]("num_clusters")},""" +
-            s""""numSinglePoints":${row.getAs[Long]("num_single_points")},""" +
+          s"""{${totalsJson(row)},""" +
             s""""metricsSummary":$metrics,""" +
             s""""metadataSummary":${metaEntries.mkString("{", ",", "}")}}""")
     }
@@ -287,9 +299,7 @@ final class RestServer(engine: ClusterEngine, port: Int = 0,
             s""""Average":${jnum(row.getAs[Double](s"${m}_avg"))}}"""
         }.mkString("{", ",", "}")
         respond(ex, 200,
-          s"""{"totalPoints":${row.getAs[Long]("total_points")},""" +
-            s""""numClusters":${row.getAs[Long]("num_clusters")},""" +
-            s""""numSinglePoints":${row.getAs[Long]("num_single_points")},""" +
+          s"""{${totalsJson(row)},""" +
             s""""metricsSummary":$metrics}""")
     }
 
@@ -597,6 +607,9 @@ final class RestServer(engine: ClusterEngine, port: Int = 0,
         case _ => err(ex, 404, "not found")
       }
     } catch {
+      // a pyramid route on a dataset without one: the client's to fix
+      case e: graft.sources.Catalog.NoPyramidException =>
+        err(ex, 404, s"cluster ${e.id} has no pyramid; build one with POST /api/clusters/${e.id}/pyramid")
       case e: Throwable => err(ex, 500, Option(e.getMessage).getOrElse(e.getClass.getName))
     }
   })

@@ -41,6 +41,21 @@ import scala.collection.mutable
   *      Consistency beats availability at mutation points; a request
   *      racing a delete may fail and retry, by design.
   *
+  * Pyramid reads ([[loadPyramid]]) follow a third, simpler rule: one
+  * resolved pyramid relation per dataset — schema and file listing, no
+  * cached data, so nothing to unpersist — is held and filtered by every
+  * pyramid reader, instead of a `spark.read.parquet` (directory listing
+  * plus a schema-inference job) per request. The handle is DROPPED
+  * whenever the files under it may change: before and after every
+  * [[savePyramid]], after a re-[[save]], and in [[invalidate]] (append,
+  * delete, compaction). A per-id generation counter, bumped on every
+  * drop, makes sure a handle resolved while a rewrite was in flight is
+  * returned to its caller but never kept. A dataset with no pyramid
+  * keeps no handle ([[Catalog.NoPyramidException]]), so a later build
+  * is served. Like the LRU, the handle sees only rewrites made through
+  * this catalog: a pyramid rewritten by another process is not
+  * re-listed here.
+  *
   * Scale notes: MEMORY_AND_DISK (not MEMORY_ONLY) so a 100 TB dataset
   * degrades to disk-backed partitions instead of OOM; tile partitioning
   * bounds each file's spatial extent so viewport queries touch only
@@ -64,6 +79,10 @@ object Catalog {
     val tyMax = clamp(math.floor(Mercator.projYs(math.max(-90.0, b.minLat - eps), Se5) / 512.0).toLong)
     for (ty <- tyMin to tyMax; tx <- txMin to txMax) yield ty * 32 + tx
   }
+
+  /** A pyramid read on a dataset that has no persisted pyramid. */
+  final class NoPyramidException(val id: String)
+    extends NoSuchElementException(s"dataset $id has no pyramid")
 }
 
 final class Catalog(spark: SparkSession, warehouseDir: String, maxCached: Int = 5,
@@ -79,6 +98,18 @@ final class Catalog(spark: SparkSession, warehouseDir: String, maxCached: Int = 
   // unpersist, keyed by dataset id so mutations can purge them (see the
   // class doc's eviction-drain contract)
   private val draining = mutable.ArrayBuffer.empty[(String, DataFrame, Long)]
+  // held pyramid relations and their drop counters (the class doc's
+  // pyramid-handle rule)
+  private val pyramids = mutable.HashMap.empty[String, DataFrame]
+  private val pyramidGen = mutable.HashMap.empty[String, Long].withDefaultValue(0L)
+
+  /** Forget the held pyramid handle and bump the generation, so a
+    * resolution already in flight is not kept either.
+    */
+  private def dropPyramid(id: String): Unit = synchronized {
+    pyramids.remove(id)
+    pyramidGen(id) += 1
+  }
 
   /** Move an evicted frame to the draining list and unpersist anything
     * whose grace window has lapsed. Callers hold the monitor.
@@ -113,6 +144,7 @@ final class Catalog(spark: SparkSession, warehouseDir: String, maxCached: Int = 
     * change; mutations must purge without grace.
     */
   private def invalidate(id: String): Unit = synchronized {
+    dropPyramid(id)
     lru.remove(id).foreach(_.unpersist())
     lastAccessMs.remove(id)
     draining.filterInPlace { case (dId, d, _) =>
@@ -131,6 +163,7 @@ final class Catalog(spark: SparkSession, warehouseDir: String, maxCached: Int = 
   }
 
   private def dsPath(id: String) = s"$warehouseDir/$id"
+  private def pyramidPath(id: String) = s"${dsPath(id)}/_pyramid"
 
   /** Total on-disk bytes under a dataset dir (the reference's catalog
     * fileSize field — cluster/helpers.go:88-93).
@@ -176,6 +209,9 @@ final class Catalog(spark: SparkSession, warehouseDir: String, maxCached: Int = 
       .option("compression", "zstd")
       .partitionBy("tile_z5")
       .parquet(path)
+    // the overwrite removed any pyramid; a handle resolved during the
+    // write may still list its files
+    dropPyramid(id)
     val n = obs.get("n").asInstanceOf[Long]
     val info = SavedInfo(id, n, System.currentTimeMillis(), path, dirSize(path))
     Files.writeString(Paths.get(path, "_graft_meta.json"),
@@ -223,8 +259,9 @@ final class Catalog(spark: SparkSession, warehouseDir: String, maxCached: Int = 
     * invisible to the main dataset scan).
     */
   def savePyramid(id: String, pyramid: DataFrame): String = {
-    val path = s"${dsPath(id)}/_pyramid"
-    pyramid
+    val path = pyramidPath(id)
+    dropPyramid(id)
+    try pyramid
       .withColumn("tile_z5", tileZ5(col("lon"), col("lat")))
       .repartitionByRange(col("zoom"), col("tile_z5"))
       .sortWithinPartitions("zoom", "tile_z5")
@@ -232,11 +269,25 @@ final class Catalog(spark: SparkSession, warehouseDir: String, maxCached: Int = 
       .option("compression", "zstd")
       .partitionBy("zoom")
       .parquet(path)
+    finally dropPyramid(id)
     path
   }
 
-  def loadPyramid(id: String): DataFrame =
-    spark.read.parquet(s"${dsPath(id)}/_pyramid")
+  /** The dataset's pyramid as one held relation (see the class doc's
+    * pyramid-handle rule); readers filter it. A miss resolves outside
+    * the monitor, so it never blocks live [[load]] calls. Throws
+    * [[Catalog.NoPyramidException]] when no pyramid is persisted.
+    */
+  def loadPyramid(id: String): DataFrame = {
+    val (held, gen) = synchronized((pyramids.get(id), pyramidGen(id)))
+    held.getOrElse {
+      val path = pyramidPath(id)
+      if (!Files.isDirectory(Paths.get(path))) throw new Catalog.NoPyramidException(id)
+      val df = spark.read.parquet(path)
+      synchronized { if (pyramidGen(id) == gen) pyramids.put(id, df) }
+      df
+    }
+  }
 
   /** Persist the mergeable pyramid partial state
     * ([[graft.operators.PyramidState]]) so ingest batches can maintain

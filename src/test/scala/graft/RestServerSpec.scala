@@ -280,6 +280,29 @@ class RestServerSpec extends SparkSpec {
     } finally srv.stop()
   }
 
+  test("live /metadata on a viewport with no points: 200 and totalPoints 0") {
+    import org.apache.spark.sql.functions.col
+    val id = engine.list().head.id
+    val (w, s, e, n) = (10.0, 10.0, 10.0001, 10.0001)
+    assert(engine.load(id).filter(col("lon").between(w, e) && col("lat").between(s, n)).count() == 0L)
+    val r = get(s"/api/clusters/$id/metadata?zoom=8&west=$w&south=$s&east=$e&north=$n")
+    assert(r.statusCode() == 200, r.body())
+    assert(r.body().contains(""""totalPoints":0"""), r.body())
+  }
+
+  test("pyramid routes answer 404 naming the build route until a pyramid is built") {
+    val id = "zz-no-pyramid"
+    engine.createDataset(id, 50)
+    for (route <- Seq("pyramid", "pyramid/metadata")) {
+      val r = get(s"/api/clusters/$id/$route?$viewport")
+      assert(r.statusCode() == 404, r.body())
+      assert(r.body().contains(s"POST /api/clusters/$id/pyramid"), r.body())
+    }
+    assert(post(s"/api/clusters/$id/pyramid", """{"zMin": 0, "zMax": 2}""").statusCode() == 200)
+    val m = get(s"/api/clusters/$id/pyramid/metadata?zoom=0&west=-180&south=-85.0511&east=180&north=85.0511")
+    assert(m.statusCode() == 200 && m.body().contains(""""totalPoints":50"""), m.body())
+  }
+
   test("POST /api/clusters/{id}/load + bad params; shutdown") {
     val id = engine.list().head.id
     val r = post(s"/api/clusters/$id/load", "")
