@@ -490,28 +490,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // every execution-start event carries explainString(plan); deep
-      // cached lineages late in a 260-query run can make that TEXT
-      // multi-GB (the default cap is ~2^31, paid in build time AND
-      // heap before truncation kicks in). Bound the print, not the plan.
-      .config("spark.sql.maxPlanStringLength", "100000")
-      // residue bounds (r15): the status store retains plan text for
-      // 1000 executions by default (~100 KB each at the cap above) —
-      // 50 keeps post-mortem value at 1/20 the heap; the periodic-GC
-      // backstop drops from 30 min (longer than a suite) to 5, so the
-      // ContextCleaner reclaims dead broadcast blocks even between
-      // Residue sweeps.
-      .config("spark.sql.ui.retainedExecutions", "50")
-      .config("spark.cleaner.periodicGC.interval", "5min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.start("graft-bench")
 
     // warm the session (JVM, codegen, FS) outside the timed region
     spark.range(1000000L).selectExpr("sum(id)").collect()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints formatted physical plans for the headline
   * queries so scan pruning (PushedFilters/partition pruning), join
   * strategies (broadcast vs sort-merge), and WholeStageCodegen spans
@@ -27,12 +25,7 @@ object Explain {
         "q_shortest_path", "q_pagerank_personal", "q_basket_rules",
         "q_ab_test", "q_dedup_deleted", "q_pyramid_deleted",
         "q_pattern_funnel", "q_regression")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.start("graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
     for (n <- names) {
       println(s"\n========== $n ==========")

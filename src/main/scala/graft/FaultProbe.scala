@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.{CachePool, Dedup}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Executor-loss validation on a REAL multi-process cluster
@@ -94,15 +93,12 @@ object FaultProbe {
       "java.base/sun.nio.ch", "java.base/sun.nio.cs",
       "java.base/sun.security.action", "java.base/sun.util.calendar")
       .map(p => s"--add-opens=$p=ALL-UNNAMED").mkString(" ")
-    val spark = SparkSession.builder()
+    // 8 shuffle partitions across the cluster's two 4-core executors
+    val spark = Session.builder("graft-fault", threads = 8)
       .master("local-cluster[2,4,4096]")
       .config("spark.executor.memory", "3g")
       .config("spark.executor.extraClassPath", "/root/repo/target/scala-2.13/classes")
       .config("spark.executor.extraJavaOptions", addOpens)
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val appId = spark.sparkContext.applicationId

@@ -254,14 +254,7 @@ object GenData {
     onlyTables = opts.find(_.startsWith("only="))
       .map(_.stripPrefix("only=").split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .getOrElse(Set.empty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .appName("graft-gendata")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.start("graft-gendata")
     try generate(spark, args(0), args(1).toDouble, openVocab)
     finally spark.stop()
   }

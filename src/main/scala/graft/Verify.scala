@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -29,19 +28,7 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // see Bench: bound plan-STRING building for execution events,
-      // retained-execution heap, and broadcast-block residue
-      .config("spark.sql.maxPlanStringLength", "100000")
-      .config("spark.sql.ui.retainedExecutions", "50")
-      .config("spark.cleaner.periodicGC.interval", "5min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.start("graft-verify")
     new java.io.File(outDir).mkdirs()
     // dev-iteration filter (same contract as Bench): comma-separated
     // query names; absent/empty = the full driver run

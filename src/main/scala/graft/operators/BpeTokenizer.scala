@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.plans.Functions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -115,8 +116,7 @@ object BpeTokenizer {
     */
   def encode(docs: DataFrame, merges: Seq[Merge], textCol: String = "text",
              idCol: String = "doc_id"): DataFrame = {
-    graft.plans.TextExpressions.ensureRegistered()
-    val enc = call_function("graft_bpe_apply", docSymbols(textCol),
+    val enc = Functions.call("graft_bpe_apply", docSymbols(textCol),
       lit(merges.map(m => s" ${m.lft} ${m.rgt} ").toArray),
       lit(merges.map(m => s" ${m.merged} ").toArray))
     val nTok = size(split(col(textCol), " ")).cast("long")
@@ -147,8 +147,7 @@ object BpeTokenizer {
     */
   def fertility(docs: DataFrame, merges: Seq[Merge], groupCol: String = "source",
                 textCol: String = "text"): DataFrame = {
-    graft.plans.TextExpressions.ensureRegistered()
-    val enc = call_function("graft_bpe_apply", docSymbols(textCol),
+    val enc = Functions.call("graft_bpe_apply", docSymbols(textCol),
       lit(merges.map(m => s" ${m.lft} ${m.rgt} ").toArray),
       lit(merges.map(m => s" ${m.merged} ").toArray))
     val nTok = size(split(col(textCol), " ")).cast("long")

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.plans.Functions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -221,7 +222,6 @@ object CorpusStats {
     */
   def distinctNgrams(docs: DataFrame, maxN: Int = 3, textCol: String = "text",
                      sourceCol: String = "source"): DataFrame = {
-    graft.plans.TextExpressions.ensureRegistered()
     val len = size(split(col(textCol), " ")).cast("long")
     // totals: Σ max(len − n + 1, 0) per source, one wide agg then melted
     // to (source, n) rows — zero explode on the corpus-sized side
@@ -237,7 +237,7 @@ object CorpusStats {
     // exploded once, then a global distinct count per (source, n)
     val grams = docs.select(col(sourceCol).as("source"),
         explode(concat((1 to maxN).map(n =>
-          transform(call_function("graft_shingles", col(textCol), lit(n)),
+          transform(Functions.call("graft_shingles", col(textCol), lit(n)),
             g => struct(lit(n).cast("long").as("n"), g.as("g")))): _*)).as("x"))
       .groupBy(col("source"), col("x.n").as("n"))
       .agg(countDistinct(col("x.g")).as("distinct_grams"))
@@ -418,11 +418,10 @@ object CorpusStats {
     // stays in whole-stage codegen (measured as the query's dominant
     // single job at sf0.1: 0.70 s of the 1.9 s steady run)
     val docBi = CachePool.track({
-      graft.plans.TextExpressions.ensureRegistered()
       docs
         .filter(size(toks) >= 2)
         .select(col(idCol).as("doc"),
-          explode(call_function("graft_bigrams", col(textCol))).as("bg"))
+          explode(Functions.call("graft_bigrams", col(textCol))).as("bg"))
         .groupBy(col("doc"), col("bg.t1").as("t1"), col("bg.term").as("term"))
         .agg(count(lit(1)).as("m"))
     })

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.plans.Functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -31,10 +32,8 @@ object Dedup {
     * builtin transform/array_distinct form ran per-element in the
     * expression interpreter). Empty array below 3 tokens.
     */
-  def shingles3(text: Column): Column = {
-    graft.plans.TextExpressions.ensureRegistered()
-    call_function("graft_shingles", text, lit(3))
-  }
+  def shingles3(text: Column): Column =
+    Functions.call("graft_shingles", text, lit(3))
 
   /** MinHash signature: k permutations simulated as md5("<i>|" + shingle),
     * minimum taken lexicographically over the doc's shingle set — a
@@ -43,10 +42,8 @@ object Dedup {
     * the k·|shingles| hashes instead of an interpreted fresh-instance
     * md5 per element.
     */
-  def minhashSig(shingles: Column, k: Int): Column = {
-    graft.plans.TextExpressions.ensureRegistered()
-    call_function("graft_minhash", shingles, lit(k))
-  }
+  def minhashSig(shingles: Column, k: Int): Column =
+    Functions.call("graft_minhash", shingles, lit(k))
 
   /** LSH band keys: adjacent pairs of signature slots hashed together.
     * A candidate pair must agree on the full 2-slot band — the standard
@@ -256,7 +253,6 @@ object Dedup {
     */
   private[graft] def verifyJaccardImpl(cand: DataFrame, sh: DataFrame, idCol: String,
                                        threshold: Double, semiPrune: Boolean): DataFrame = {
-    graft.plans.TextExpressions.ensureRegistered()
     val pairs =
       if (semiPrune) {
         val deduped = cand.distinct()
@@ -278,7 +274,7 @@ object Dedup {
     pairs
       .join(side("id_a").withColumnRenamed("s", "s_a"), "id_a")
       .join(side("id_b").withColumnRenamed("s", "s_b"), "id_b")
-      .withColumn("inter", call_function("graft_isect", col("s_a"), col("s_b")).cast("long"))
+      .withColumn("inter", Functions.call("graft_isect", col("s_a"), col("s_b")).cast("long"))
       .withColumn("union_n",
         size(col("s_a")).cast("long") + size(col("s_b")).cast("long") - col("inter"))
       .filter(col("inter") * lit(1.0) / col("union_n") >= threshold)
@@ -299,7 +295,7 @@ object Dedup {
     * identical sets (≈ exact-dup families — ~half of a web-scale
     * corpus) are indistinguishable here. The prefix/candidate/verify
     * pipeline runs on ONE representative (= min id) per distinct set,
-    * keyed by md5 of the doc's [[graft.plans.SetDigests]] blob; doc
+    * keyed by md5 of the doc's [[graft.plans.TextDigests]] blob; doc
     * pairs come back from an output-sized expansion — cross-family
     * pairs via two rep-keyed joins (inter/union are set functions, so
     * the rep pair's values ARE every member pair's values), same-set
@@ -332,7 +328,6 @@ object Dedup {
   def ngramJaccard(docs: DataFrame, threshold: Double = 0.5,
                    textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, s"bad jaccard threshold $threshold")
-    graft.plans.TextExpressions.ensureRegistered()
     // (id, d) — the doc's blob in ONE compiled eval per row
     // (TextDigests: a multi-column projection over shingles3 would
     // re-evaluate the shingling per derived column — CollapseProject
@@ -341,7 +336,7 @@ object Dedup {
     // derive from the cached attribute. Feeds families, postings, the
     // prefix blob attach and the expansion.
     val famAll = CachePool.track(docs.select(col(idCol).as("id"),
-      call_function("graft_textdig", col(textCol), lit(3)).as("d")))
+      Functions.call("graft_textdig", col(textCol), lit(3)).as("d")))
     val famDocs = famAll.filter(length(col("d")) >= 16)
       .withColumn("len", (length(col("d")) / lit(16)).cast("int"))
     // ADAPTIVE COLLAPSE GATE (one aggregate job over the cached blob
@@ -378,7 +373,7 @@ object Dedup {
         famDocs.join(fams.select(col("rep").as("id")), Seq("id"), "left_semi"))
       else famDocs
     val ds = reps.select(col("id"), col("len"),
-      explode(call_function("graft_digsplit", col("d"))).as("g"))
+      explode(Functions.call("graft_digsplit", col("d"))).as("g"))
     // global rarity order = (doc frequency, digest) — no global rank
     // column needed, the tuple itself is the sort key (any consistent
     // total order is a valid ppjoin global order; the oracle replays
@@ -427,7 +422,7 @@ object Dedup {
       // join
       else prefixBase
         .join(reps.select(col("id"),
-          call_function("graft_digtrunc", col("d"), lit(4)).as("dt")), "id")
+          Functions.call("graft_digtrunc", col("d"), lit(4)).as("dt")), "id")
         .select(col("id"), col("g"), col("len"), col("rn"), col("dt")))
     // ppjoin's length filter rides the join: jaccard ≥ t ⟹
     // inter ≤ min(|a|,|b|) and union ≥ max(|a|,|b|), so
@@ -462,7 +457,7 @@ object Dedup {
         candJoin.select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       else candJoin
         .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-          explode(call_function("graft_isect_emit",
+          explode(Functions.call("graft_isect_emit",
             col("a.dt"), col("b.dt"), lit(threshold), lit(4))).as("iu"))
         .select(col("id_a"), col("id_b"))
       ).distinct()
@@ -484,7 +479,7 @@ object Dedup {
       .join(famSide("id_a", "d_a"), "id_a")
       .join(famSide("id_b", "d_b"), "id_b")
       .select(col("id_a"), col("id_b"),
-        explode(call_function("graft_isect_emit",
+        explode(Functions.call("graft_isect_emit",
           col("d_a"), col("d_b"), lit(threshold), lit(16))).as("iu"))
       .select(col("id_a"), col("id_b"),
         col("iu.inter").as("inter"), col("iu.union_n").as("union_n"))
@@ -526,9 +521,8 @@ object Dedup {
     */
   private[graft] def shingleFamilies(docs: DataFrame, textCol: String = "text",
                                      idCol: String = "doc_id"): DataFrame = {
-    graft.plans.TextExpressions.ensureRegistered()
     docs.select(col(idCol).as("id"),
-        call_function("graft_textdig", col(textCol), lit(3)).as("d"))
+        Functions.call("graft_textdig", col(textCol), lit(3)).as("d"))
       .filter(length(col("d")) >= 16)
       .select(col("id"), md5(col("d")).as("fp"))
       .groupBy(col("fp"))
@@ -600,7 +594,6 @@ object Dedup {
                        minCont: Double = 0.8,
                        textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     require(minCont > 0.0, s"bad containment threshold $minCont")
-    graft.plans.TextExpressions.ensureRegistered()
     // r17: two moves from the ngramJaccard/bitextMineLsh rework,
     // shaped for THIS operator's measured profile (sf4 probe: small
     // minhash buckets — max ~300 — and only ~760k raw band matches,
@@ -625,7 +618,7 @@ object Dedup {
     // from the cached attribute (4 md5s/row). Unfiltered cache, <3-token
     // docs dropped on the cached blob length.
     val per0 = CachePool.track(docs.select(col(idCol).as("id"),
-      call_function("graft_textdig", col(textCol), lit(3)).as("d"),
+      Functions.call("graft_textdig", col(textCol), lit(3)).as("d"),
       minhashSig(shingles3(col(textCol)), k).as("g")))
     val per = per0.filter(length(col("d")) >= 16)
       .withColumn("len", (length(col("d")) / lit(16)).cast("int"))
@@ -648,7 +641,7 @@ object Dedup {
       .join(per.select(col("id").as("id_b"),
         col("len").cast("long").as("sz_b"), col("d").as("d_b")), "id_b")
       .select(col("id_a"), col("id_b"), col("sz_a"), col("sz_b"),
-        explode(call_function("graft_isect_emit",
+        explode(Functions.call("graft_isect_emit",
           col("d_a"), col("d_b"), lit(0.0), lit(16))).as("iu"))
       .select(col("id_a"), col("id_b"), col("iu.inter").as("inter"),
         col("sz_a"), col("sz_b"))
@@ -923,7 +916,6 @@ object Dedup {
   def duplicatedSpans(docs: DataFrame, spanLen: Int = 8,
                       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     require(spanLen >= 2, s"bad span length $spanLen")
-    graft.plans.TextExpressions.ensureRegistered()
     // fused positional span digests ([[graft.plans.SpanHashes]]) — the
     // transform(sequence…md5(concat_ws(slice))) form re-sliced and
     // re-hashed every window in the expression interpreter (the
@@ -931,7 +923,7 @@ object Dedup {
     // explode() drops them, so no pre-filter needed
     val sp = CachePool.track(docs
       .select(col(idCol).as("doc"),
-        explode(call_function("graft_spanhash", col(textCol), lit(spanLen))).as("h")))
+        explode(Functions.call("graft_spanhash", col(textCol), lit(spanLen))).as("h")))
     val mult = sp.groupBy(col("h")).agg(count(lit(1)).as("mult"))
     sp.join(mult, "h")
       .groupBy(col("doc").as(idCol))
@@ -1001,12 +993,11 @@ object Dedup {
     // native one-pass signature ([[graft.plans.SimhashLong]]): the
     // builtin zip_with-in-aggregate form was interpreted and dominated
     // this operator's cost at 48 bits
-    graft.plans.TextExpressions.ensureRegistered()
     // feeds the family rollup, the second-min join and the per-doc
     // output join — persist, or every token is md5'd three times
     // (bounded lifecycle via the pool)
     val sigs = CachePool.track(docs.select(col(idCol).as("id"),
-      call_function("graft_simhash", col(textCol), lit(sigBits)).as("sig")))
+      Functions.call("graft_simhash", col(textCol), lit(sigBits)).as("sig")))
     // DISTINCT-SIG COLLAPSE (r17, VERDICT r16 #1 — the r15 dHash
     // distinct-hash move): Hamming distance is a function of the sig
     // pair alone, so the band join runs on |distinct sigs|, not corpus
@@ -1028,7 +1019,7 @@ object Dedup {
     // collapse map-side.
     val fams = CachePool.track(sigs.groupBy(col("sig"))
       .agg(count(lit(1)).as("fam_n"), min(col("id")).as("m1"),
-        call_function("graft_min2", col("id")).as("m2")))
+        Functions.call("graft_min2", col("id")).as("m2")))
     val bandArr = array((0 until bands).map { b =>
       struct(lit(b.toLong).as("band"),
         shiftright(col("sig"), width * (bands - 1 - b)).bitwiseAND(lit(mask)).as("bv"))

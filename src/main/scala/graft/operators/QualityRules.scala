@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.TextAnalysis
+import graft.plans.Functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -77,7 +78,6 @@ object QualityRules {
   def winnowFingerprints(docs: DataFrame, w: Int = 4, textCol: String = "text",
                          idCol: String = "doc_id"): DataFrame = {
     require(w >= 1, s"bad winnow window $w")
-    graft.plans.TextExpressions.ensureRegistered()
     val t = TextAnalysis.tokens(col(textCol))
     // fused native pass ([[graft.plans.WinnowFps]]): the builtin
     // transform/array_min/slice chain is interpreted and re-evaluates
@@ -85,7 +85,7 @@ object QualityRules {
     // single-pass is ~90×)
     docs.filter(size(t) >= w + 2)
       .select(col(idCol),
-        explode(call_function("graft_winnow", col(textCol), lit(w))).as("fp"))
+        explode(Functions.call("graft_winnow", col(textCol), lit(w))).as("fp"))
       .orderBy(idCol, "fp")
   }
 

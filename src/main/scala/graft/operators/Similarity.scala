@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.plans.Functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -47,10 +48,8 @@ object Similarity {
     * `dims` cap is part of the contract (truncate-to-dims over longer
     * arrays), enforced inside the fused loop at zero cost.
     */
-  def dot(a: Column, b: Column, dims: Int): Column = {
-    graft.plans.SimilarityExpressions.ensureRegistered()
-    call_function("graft_dot", a, b, lit(dims))
-  }
+  def dot(a: Column, b: Column, dims: Int): Column =
+    Functions.call("graft_dot", a, b, lit(dims))
 
   def norm(a: Column, dims: Int): Column = sqrt(dot(a, a, dims))
 
@@ -75,10 +74,8 @@ object Similarity {
     * (the builtin-expression form was bits×dims literal nodes per row
     * and the other half of round 1's codegen blowout).
     */
-  def hyperplaneSig(emb: Column, bits: Int, dims: Int): Column = {
-    graft.plans.SimilarityExpressions.ensureRegistered()
-    call_function("graft_hsig", emb, lit(bits), lit(dims))
-  }
+  def hyperplaneSig(emb: Column, bits: Int, dims: Int): Column =
+    Functions.call("graft_hsig", emb, lit(bits), lit(dims))
 
   /** Signature bits scaled to corpus size: bits = ⌈log₂(n / targetBucketSize)⌉
     * (clamped). Expected bucket population under random hyperplanes is
@@ -201,7 +198,6 @@ object Similarity {
   def mmrTopK(embs: DataFrame, queryVecId: Long, poolN: Int, k: Int,
               lambdaPpm: Long, dims: Int,
               idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    graft.plans.SimilarityExpressions.ensureRegistered()
     val q = embs.filter(col(idCol) === queryVecId)
       .select(col(embCol).as("q_emb"), norm(col(embCol), dims).as("q_nrm"))
     // micro-integer relevance BEFORE the top-N cut, so the pool boundary
@@ -235,7 +231,7 @@ object Similarity {
         transform(col("pp"), x => x("pb")).as("pbs"),
         transform(col("pp"), x => x("ps")).as("pss"))
     candArr.crossJoin(pairArr)
-      .select(posexplode(call_function("graft_mmr",
+      .select(posexplode(Functions.call("graft_mmr",
         struct(col("ids"), col("rels"), col("pas"), col("pbs"), col("pss")),
         lit(k), lit(lambdaPpm))).as(Seq("pos", "r")))
       .select((col("pos") + 1).cast("long").as("rank"),
@@ -979,9 +975,8 @@ object Similarity {
     */
   def bqEncode(embs: DataFrame, dims: Int,
                idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    graft.plans.SimilarityExpressions.ensureRegistered()
     embs.select(col(idCol),
-      call_function("graft_bqpack", col(embCol), lit(dims)).as("bq"))
+      Functions.call("graft_bqpack", col(embCol), lit(dims)).as("bq"))
   }
 
   /** Hamming distance between two packed sign-bit codes: an unrolled
@@ -1691,9 +1686,8 @@ object Similarity {
     // zero-padded buffer is exact — pinned against the window form in
     // SimilaritySpec.
     def knnSum(key: String, other: String, out: String) = {
-      graft.plans.TextExpressions.ensureRegistered()
       pairs.groupBy(col(key))
-        .agg(call_function("graft_topksum", col("cos_u"), lit(kNeigh)).as(out))
+        .agg(Functions.call("graft_topksum", col("cos_u"), lit(kNeigh)).as(out))
     }
     val scored = pairs
       .join(knnSum("a_id", "b_id", "ka_sum"), "a_id")
@@ -1865,10 +1859,8 @@ object Similarity {
     // hygiene, not a headline win — rounds are ~0.6 s either way.
     // cv is built above with exactly `dims` elements, so graft_doti's
     // short-array NULL sentinel is unreachable here.
-    def sCol(w: Array[Long]): Column = {
-      graft.plans.TextExpressions.ensureRegistered()
-      call_function("graft_doti", col("cv"), array(w.map(lit(_)): _*))
-    }
+    def sCol(w: Array[Long]): Column =
+      Functions.call("graft_doti", col("cv"), array(w.map(lit(_)): _*))
 
     var w = Array.fill(dims)(1000000L)
     for (_ <- 1 to iters) {

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.plans.Functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -303,10 +304,9 @@ object TrainingPrep {
     // native one-pass featurizer ([[graft.plans.BigramBuckets]]) — the
     // builtin transform/concat/md5 chain was interpreted per bigram and
     // dominated this operator's cost
-    graft.plans.TextExpressions.ensureRegistered()
     def feats(df: DataFrame): DataFrame =
       df.select(col(idCol).as("doc"),
-        explode(call_function("graft_feat_buckets", col(textCol),
+        explode(Functions.call("graft_feat_buckets", col(textCol),
           lit(buckets))).as("f"))
     val rawFeats = CachePool.track(feats(raw))
     // unseen buckets still carry smoothed mass: build the full bucket
@@ -410,11 +410,10 @@ object TrainingPrep {
     */
   def repetitionStats(docs: DataFrame,
                       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    graft.plans.TextExpressions.ensureRegistered()
     val t = split(col(textCol), " ")
     docs.select(col(idCol), size(t).cast("long").as("nt"),
         size(array_distinct(t)).cast("long").as("nu"),
-        call_function("graft_topgram", col(textCol), lit(2)).as("tg"))
+        Functions.call("graft_topgram", col(textCol), lit(2)).as("tg"))
       .filter(col("tg").isNotNull) // < 2 tokens: no 2-grams
       .select(col(idCol),
         col("tg.n_grams").as("n_grams"), col("tg.top_n").as("top_n"),

@@ -2,10 +2,10 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
-import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, Greatest, If, IsNull, Least, Literal, Or}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Cast, Concat, Expression, Greatest, If, IsNull, Least, LessThanOrEqual, Literal, Or, RaiseError}
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.TypeUtils
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.types.{DataType, LongType, StringType}
 
 /** Second-smallest value of a group in ONE aggregation pass
   * (`graft_min2`) — a [[DeclarativeAggregate]], so it partial-
@@ -87,7 +87,8 @@ case class MinTwo(child: Expression)
   * forms return the sum of the k largest elements of the multiset.
   *
   * Contract: inputs must be > 0 (the buffer pads with zeros, so a
-  * non-positive input could displace padding semantics); groups with
+  * non-positive input would be lost among the padding); an input ≤ 0
+  * fails the query with an error naming the contract. Groups with
   * fewer than k values sum what they have. Nulls are ignored like
   * every builtin aggregate. k is a literal, 1 ≤ k ≤ 8.
   *
@@ -102,26 +103,34 @@ case class TopKPosSum(child: Expression, k: Int)
   require(k >= 1 && k <= 8, s"graft_topksum supports k in [1, 8], got $k")
   override def prettyName: String = "graft_topksum"
   override def nullable: Boolean = false
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
+  override def dataType: DataType = LongType
 
   override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == org.apache.spark.sql.types.LongType) TypeCheckResult.TypeCheckSuccess
+    if (child.dataType == LongType) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(s"$prettyName requires BIGINT input")
 
   private lazy val slots = Seq.tabulate(k)(i =>
-    AttributeReference(s"s${i + 1}", org.apache.spark.sql.types.LongType, nullable = false)())
+    AttributeReference(s"s${i + 1}", LongType, nullable = false)())
 
   override lazy val aggBufferAttributes: Seq[AttributeReference] = slots
 
   override lazy val initialValues: Seq[Expression] =
     Seq.fill(k)(Literal(0L))
 
+  // the contract check rides the first slot's update (every slot's
+  // update runs on every row), as a RaiseError branch inside codegen
+  private lazy val checked: Expression = If(LessThanOrEqual(child, Literal(0L)),
+    RaiseError(Concat(Seq(
+      Literal(s"$prettyName requires inputs > 0, got "), Cast(child, StringType))))
+      .copy(dataType = LongType),
+    child)
+
   // insert child into the descending slot list: s1' = max(s1, x),
   // s_i' = max(s_i, min(s_{i-1}, x)) — the value cascades down past
   // every slot it cannot beat. Null inputs leave the buffer unchanged.
   override lazy val updateExpressions: Seq[Expression] =
     slots.zipWithIndex.map { case (s, i) =>
-      val ins = if (i == 0) Greatest(Seq(s, child))
+      val ins = if (i == 0) Greatest(Seq(s, checked))
                 else Greatest(Seq(s, Least(Seq(slots(i - 1), child))))
       If(IsNull(child), s, ins)
     }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
@@ -26,14 +25,4 @@ object BloomExpressions {
   val all: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "graft_bloom_agg" -> (es => new BloomFilterAggregate(es(0), es(1), es(2))),
     "graft_bloom_mc" -> (es => BloomFilterMightContain(es(0), es(1))))
-
-  /** Register on an existing session (idempotent temp functions). */
-  def register(spark: SparkSession): Unit =
-    all.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
-    }
-
-  def ensureRegistered(): Unit =
-    SparkSession.getActiveSession.foreach(register)
 }

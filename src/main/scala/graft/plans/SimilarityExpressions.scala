@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
@@ -371,17 +370,4 @@ object SimilarityExpressions {
     "graft_hsig" -> (es => HyperplaneSig(es(0), intLit(es(1)), intLit(es(2)))),
     "graft_mmr" -> (es => MmrSelect(es(0), intLit(es(1)), longLit(es(2)))),
     "graft_bqpack" -> (es => BqPack(es(0), intLit(es(1)))))
-
-  /** Register on an existing session (idempotent temp functions). */
-  def register(spark: SparkSession): Unit =
-    all.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
-    }
-
-  /** Register on the active session — called by the [[graft.operators.Similarity]]
-    * column builders so DataFrame users need no explicit setup.
-    */
-  def ensureRegistered(): Unit =
-    SparkSession.getActiveSession.foreach(register)
 }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -61,7 +60,6 @@ object TextExpressions {
     "graft_simhash" -> (es => SimhashLong(es(0), intLit(es(1)))),
     "graft_feat_buckets" -> (es => BigramBuckets(es(0), intLit(es(1)))),
     "graft_isect" -> (es => IntersectCount(es(0), es(1))),
-    "graft_setdig" -> (es => SetDigests(es(0))),
     "graft_textdig" -> (es => TextDigests(es(0), intLit(es(1)))),
     "graft_digsplit" -> (es => DigestSplit(es(0))),
     "graft_digtrunc" -> (es => DigestTruncate(es(0), intLit(es(1)))),
@@ -122,8 +120,19 @@ object TextExpressions {
     new GenericArrayData(out)
   }
 
-  /** Sorted concatenated per-element md5 digests — the shared eval core
-    * of [[SetDigests]] and [[TextDigests]].
+  /** SORTED per-element md5 digests of a string array as ONE flat BINARY
+    * blob (16-byte blocks, unsigned-lexicographic block order) — the eval
+    * core of [[TextDigests]]. Fixed blocks need no separator, so two
+    * arrays yield the same blob iff they denote the same element SET
+    * (modulo an md5 collision — the same injectivity assumption
+    * exactDedup's md5(text) grouping already makes). The blob is the
+    * whole representation Dedup.ngramJaccard needs: md5(blob) is the
+    * family fingerprint of its exact-dup pre-collapse, DigestSplit
+    * explodes it into 16-byte posting keys, and IntersectEmit
+    * merge-counts two blobs' common blocks — shingle STRINGS never
+    * travel past the projection. Callers pass distinct arrays (shingle
+    * sets); duplicates would produce duplicate blocks and alter both the
+    * fingerprint and the merge counts.
     */
   private[plans] def setDigestBlob(arr: ArrayData): Array[Byte] = {
     val m = arr.numElements()
@@ -152,15 +161,6 @@ object TextExpressions {
     while (i < m) { System.arraycopy(digests(i), 0, out, i * 16, 16); i += 1 }
     out
   }
-
-  def register(spark: SparkSession): Unit =
-    all.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
-    }
-
-  def ensureRegistered(): Unit =
-    SparkSession.getActiveSession.foreach(register)
 }
 
 /** Real whole-stage codegen for the fused text expressions: generated
@@ -585,40 +585,7 @@ case class IntersectCount(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** SORTED per-element md5 digests of a string array as ONE flat BINARY
-  * blob (16-byte blocks, unsigned-lexicographic block order). Fixed
-  * blocks need no separator, so two arrays yield the same blob iff
-  * they denote the same element SET (modulo an md5 collision — the
-  * same injectivity assumption exactDedup's md5(text) grouping already
-  * makes). The blob is the whole representation Dedup.ngramJaccard
-  * needs: md5(blob) is the family fingerprint of its exact-dup
-  * pre-collapse, DigestSplit explodes it into 16-byte posting keys,
-  * and IntersectEmit merge-counts two blobs' common blocks — shingle
-  * STRINGS never travel past this projection. ~16 bytes/shingle vs
-  * ~25 chars + per-object overhead for the string array it replaces.
-  * Callers pass distinct arrays (shingle sets); duplicates would
-  * produce duplicate blocks and alter both the fingerprint and the
-  * merge counts.
-  */
-case class SetDigests(child: Expression)
-    extends GraftUnaryCall {
-  override def prettyName: String = "graft_setdig"
-  override def dataType: DataType = BinaryType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires ARRAY<STRING>, got ${t.simpleString}")
-  }
-
-  override protected def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[ArrayData])
-  override protected def callSource(ref: String, c: String): String = s"$ref.compute($c)"
-  def compute(arr: ArrayData): Array[Byte] = TextExpressions.setDigestBlob(arr)
-
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** Splits a [[SetDigests]] blob back into its 16-byte blocks — the
+/** Splits a [[TextDigests]] blob back into its 16-byte blocks — the
   * posting keys of ngramJaccard's prefix pipeline (fixed 16-byte
   * BINARY keys shuffle and compare cheaper than shingle strings, and
   * any consistent total order is a valid ppjoin global order).
@@ -651,14 +618,14 @@ case class DigestSplit(child: Expression)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-/** [[WordShingles]] ∘ [[SetDigests]] in ONE compiled call: the sorted
+/** [[WordShingles]] ∘ `setDigestBlob` in ONE compiled call: the sorted
   * 16-byte-digest blob of a text's distinct word n-gram shingles,
   * straight from the string. Exists because a projection computing
   * several derived columns of `graft_shingles(text)` re-evaluates the
   * shingling per column — CollapseProject inlines the alias and
   * neither the interpreter nor codegen CSE rescues a CodegenFallback
   * expression (measured 3× shingle evals in ngramJaccard's famDocs
-  * build: filter + size + setdig). Callers cache (id, blob) and
+  * build: filter + size + digest blob). Callers cache (id, blob) and
   * derive the set size as length(blob)/16 from the cached attribute.
   * Fewer than n tokens → empty blob (zero bytes).
   */
@@ -681,7 +648,7 @@ case class TextDigests(child: Expression, n: Int)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-/** Per-block truncation of a [[SetDigests]] blob: keeps the first
+/** Per-block truncation of a [[TextDigests]] blob: keeps the first
   * `width` bytes of every 16-byte block. Truncating a byte-sorted
   * sequence by a prefix of its sort key preserves sortedness, so the
   * result is a valid (collision-coarsened) input for [[IntersectEmit]]

@@ -134,18 +134,22 @@ final class GrpcServer(engine: ClusterEngine, port: Int = 0) {
     val metaEntry = t.findNestedTypeByName("MetadataSummaryEntry")
     val statsT = messageType("MetricStats")
     val valueT = messageType("MetadataValue")
+    // a viewport with no points aggregates to nulls, which read 0 (as on
+    // REST); a null boxed into the (String, Any) pairs would reach setField
+    def isNull(c: String) = row.isNullAt(row.fieldIndex(c))
+    def num(c: String): Double = if (isNull(c)) 0.0 else row.getAs[Double](c)
+    def count(c: String): Int = if (isNull(c)) 0 else row.getAs[Long](c).toInt
     val b = DynamicMessage.newBuilder(t)
-    b.setField(t.findFieldByName("total_points"), row.getAs[Long]("total_points").toInt)
-    b.setField(t.findFieldByName("num_clusters"), row.getAs[Long]("num_clusters").toInt)
-    b.setField(t.findFieldByName("num_single_points"), row.getAs[Long]("num_single_points").toInt)
+    Seq("total_points", "num_clusters", "num_single_points")
+      .foreach(c => b.setField(t.findFieldByName(c), count(c)))
 
     val metricNames = schema.filter(_.endsWith("_sum")).map(_.stripSuffix("_sum"))
     val metricsF = t.findFieldByName("metrics_summary")
     metricNames.foreach { m =>
       val stats = dm(statsT)(
-        "min" -> row.getAs[Double](s"${m}_min"),
-        "max" -> row.getAs[Double](s"${m}_max"),
-        "average" -> row.getAs[Double](s"${m}_avg"))
+        "min" -> num(s"${m}_min"),
+        "max" -> num(s"${m}_max"),
+        "average" -> num(s"${m}_avg"))
       b.addRepeatedField(metricsF, dm(metricsEntry)(
         "key" -> m.stripPrefix("metric_"), "value" -> stats))
     }
@@ -167,8 +171,8 @@ final class GrpcServer(engine: ClusterEngine, port: Int = 0) {
       }
       addMeta(c.stripSuffix("_dist"), dm(valueT)("distribution" -> db.build()))
     }
-    // timestamp metadata: earliest/latest RFC3339
-    schema.filter(_.endsWith("_earliest")).foreach { c =>
+    // timestamp metadata: earliest/latest RFC3339; none without points
+    schema.filter(c => c.endsWith("_earliest") && !isNull(c)).foreach { c =>
       val base = c.stripSuffix("_earliest")
       val tr = dm(messageType("TimeRange"))(
         "earliest" -> row.getAs[java.sql.Timestamp](c).toInstant.toString,
@@ -180,9 +184,9 @@ final class GrpcServer(engine: ClusterEngine, port: Int = 0) {
       .foreach { c =>
         val base = c.stripSuffix("_avg")
         val r = dm(messageType("Range"))(
-          "min" -> row.getAs[Double](s"${base}_min"),
-          "max" -> row.getAs[Double](s"${base}_max"),
-          "average" -> row.getAs[Double](c))
+          "min" -> num(s"${base}_min"),
+          "max" -> num(s"${base}_max"),
+          "average" -> num(c))
         addMeta(base, dm(valueT)("range" -> r))
       }
     b.build()

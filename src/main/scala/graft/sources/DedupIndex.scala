@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.operators.{CachePool, Dedup}
+import graft.plans.Functions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -257,9 +258,8 @@ object DedupIndex {
     val nKeys = reread.count()
     val numBits = math.min(math.max(nKeys * bitsPerKey, 64L), 1L << 30)
     if (nKeys > 0L) {
-      graft.plans.BloomExpressions.register(spark)
       val bytes = reread
-        .select(call_function("graft_bloom_agg", xxhash64(col("sigkey")),
+        .select(Functions.call("graft_bloom_agg", xxhash64(col("sigkey")),
           lit(nKeys), lit(numBits)).as("bf"))
         .head().getAs[Array[Byte]](0)
       java.nio.file.Files.write(java.nio.file.Paths.get(s"$tmp/bloom.bin"), bytes)
@@ -397,7 +397,6 @@ object DedupIndex {
   def bloomGate(spark: SparkSession, path: String, batch: DataFrame,
                 k: Int = 8, bitsPerKey: Long = 10L,
                 textCol: String = "text"): DataFrame = {
-    graft.plans.BloomExpressions.register(spark)
     // bloom + live projection come from the maintained gate sidecar —
     // a warm gate build does zero index-side aggregation (r9 bench
     // regression fix: the per-probe anti-join+distinct+bloom-agg moved
@@ -414,7 +413,7 @@ object DedupIndex {
     val keyed = CachePool.track(
       batch.withColumn("sigkey", Dedup.signatureKey(col(textCol), k)))
     val mightBeDup =
-      call_function("graft_bloom_mc", lit(bloomBytes), xxhash64(col("sigkey")))
+      Functions.call("graft_bloom_mc", lit(bloomBytes), xxhash64(col("sigkey")))
     val fastPass = keyed.filter(!mightBeDup)
     val survivors = keyed.filter(mightBeDup)
       .join(sigkeys, Seq("sigkey"), "left_anti")

@@ -28,8 +28,7 @@ class DedupShuffleSpec extends SparkSpec {
     s.conf.set("spark.sql.adaptive.enabled", "false")
     // function registrations are per-session; the dedup path needs the
     // native shingle/bloom expressions
-    graft.plans.TextExpressions.register(s)
-    graft.plans.BloomExpressions.register(s)
+    graft.plans.Functions.register(s)
     s
   }
 

@@ -250,7 +250,7 @@ class DedupSpec extends SparkSpec {
     // linearly with n (quadratic candidates), which is exactly why the
     // dense default is only the pinned-SF oracle baseline.
     import org.apache.spark.sql.functions._
-    graft.plans.TextExpressions.ensureRegistered()
+    graft.plans.Functions.register(spark)
 
     def randomDocs(n: Int) = spark.range(n.toLong).select(
       col("id").as("doc_id"),

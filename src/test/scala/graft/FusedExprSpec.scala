@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
 class FusedExprSpec extends SparkSpec {
   import spark.implicits._
 
-  graft.plans.TextExpressions.register(spark)
+  graft.plans.Functions.register(spark)
 
   test("property: graft_isect equals distinct array_intersect size") {
     val word = Gen.oneOf("a", "b", "cc", "ddd", "e f", "", "yy", "zzz", "qq x")
@@ -141,6 +141,25 @@ class FusedExprSpec extends SparkSpec {
       val wantWithEmpty = cases.map(_._1).distinct
         .map(g => g -> want.getOrElse(g, 0L)).toMap
       assert(got == wantWithEmpty, s"graft_topksum k=$k drifted:\n$got\nvs brute\n$wantWithEmpty")
+    }
+  }
+
+  test("graft_topksum fails on a 0 or negative input, codegen'd and interpreted") {
+    val interpreted = spark.newSession()
+    interpreted.conf.set("spark.sql.codegen.wholeStage", "false")
+    interpreted.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    graft.plans.Functions.register(interpreted)
+    def topk(s: org.apache.spark.sql.SparkSession, vs: Seq[Long]) =
+      s.createDataFrame(vs.map(v => (1, v))).toDF("g", "v").repartition(2)
+        .groupBy(col("g")).agg(call_function("graft_topksum", col("v"), lit(2)).as("s"))
+    // the positive path aggregates inside whole-stage codegen: `*(n)`
+    val ok = topk(spark, Seq(3L, 5L, 4L))
+    assert(ok.collect().map(_.getLong(1)).toSeq == Seq(9L))
+    val plan = ok.queryExecution.executedPlan.toString
+    assert("""\*\(\d+\) HashAggregate\(.*partial_graft_topksum""".r.findFirstIn(plan).isDefined, plan)
+    for (s <- Seq(spark, interpreted); bad <- Seq(0L, -7L)) {
+      val e = intercept[Exception](topk(s, Seq(3L, bad, 5L)).collect())
+      assert(e.getMessage.contains(s"graft_topksum requires inputs > 0, got $bad"), e.getMessage)
     }
   }
 

@@ -104,6 +104,25 @@ class GrpcServerSpec extends SparkSpec {
     assert(meta.map(m => fld(m, "key").asInstanceOf[String]).contains("meta_category"))
   }
 
+  test("GetMetadata on a viewport with no points answers OK with counts of 0") {
+    val bT = t("Bounds")
+    val bounds = DynamicMessage.newBuilder(bT)
+      .setField(bT.findFieldByName("min_x"), Float.box(10f))
+      .setField(bT.findFieldByName("min_y"), Float.box(10f))
+      .setField(bT.findFieldByName("max_x"), Float.box(10.001f))
+      .setField(bT.findFieldByName("max_y"), Float.box(10.001f))
+      .build()
+    val rT = t("GetMetadataRequest")
+    val resp = call("GetMetadata", DynamicMessage.newBuilder(rT)
+      .setField(rT.findFieldByName("cluster_id"), "600p")
+      .setField(rT.findFieldByName("zoom"), Int.box(3))
+      .setField(rT.findFieldByName("bounds"), bounds)
+      .build())
+    assert(fld(resp, "total_points") == 0)
+    assert(fld(resp, "num_clusters") == 0)
+    assert(fld(resp, "num_single_points") == 0)
+  }
+
   test("unknown cluster surfaces NOT_FOUND, not a transport error") {
     val rT = t("LoadClusterRequest")
     val e = intercept[org.sparkproject.connect.grpc.StatusRuntimeException] {

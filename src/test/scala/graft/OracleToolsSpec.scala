@@ -40,10 +40,7 @@ class OracleToolsSpec extends AnyFunSuite {
   }
 
   private def writeParquet(outDir: java.io.File, name: String, sql: String): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").appName("OracleToolsSpec")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Session.builder("OracleToolsSpec", threads = 2).getOrCreate()
     spark.read.parquet(s"$sfDir/region.parquet").createOrReplaceTempView("region")
     spark.sql(sql).coalesce(1).write.mode("overwrite")
       .parquet(new java.io.File(outDir, name).getAbsolutePath)

@@ -201,7 +201,7 @@ class QualityRulesSpec extends SparkSpec {
 
   test("native graft_simhash equals the builtin bit-string path exactly") {
     import org.apache.spark.sql.functions._
-    graft.plans.TextExpressions.register(spark)
+    graft.plans.Functions.register(spark)
     val docs = (Seq("", "one", "a b", "alpha beta gamma  double space") ++
       (1 to 30).map(i => (1 to 12).map(j => s"w${(i * 3 + j) % 9}").mkString(" ")))
       .zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")

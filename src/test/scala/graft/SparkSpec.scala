@@ -7,11 +7,5 @@ import org.scalatest.funsuite.AnyFunSuite
   * suite, shuffle partitions sized for local mode).
   */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.builder(getClass.getSimpleName, threads = 4).getOrCreate()
 }
