@@ -2,9 +2,12 @@ package graft
 
 import graft.geo.GeoJson
 import graft.model.{Bounds, ClusterOptions}
-import graft.operators.{FrequencyRollup, GridCluster, Summary, TilePyramid}
+import graft.operators.{FrequencyRollup, GridCluster, PyramidState, Summary, TilePyramid}
 import graft.sources.{Catalog, PointGen}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, sum, when}
+import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.storage.StorageLevel
 
 /** Service facade: the reference's five-RPC query surface
   * (reference: proto/cluster_service.proto:7-16, runner/runner.go) as
@@ -76,10 +79,9 @@ final class ClusterEngine(val spark: SparkSession, warehouseDir: String,
     val df = load(id)
     Summary.viewportSummary(df, zoom, bounds, opts,
       metricCols = metricCols(df),
-      numericMeta = df.schema.fields
-        .filter(f => f.name.startsWith("meta_") &&
-          f.dataType == org.apache.spark.sql.types.DoubleType)
-        .map(f => f.name -> org.apache.spark.sql.functions.col(f.name)).toSeq,
+      numericMeta = df.schema.fields.toSeq
+        .filter(f => f.name.startsWith("meta_") && f.dataType == DoubleType)
+        .map(f => f.name -> col(f.name)),
       tsMetaCols = df.columns.filter(_ == "meta_timestamp").toSeq,
       catMetaCols = catMetaCols(df))
   }
@@ -104,42 +106,51 @@ final class ClusterEngine(val spark: SparkSession, warehouseDir: String,
     */
   def buildAndSavePyramid(id: String, zMin: Int, zMax: Int): String = {
     val df = load(id)
-    val n = df.count()
-    val st = TilePyramid.cellState(df, zMin, zMax, opts, metricCols(df), catMetaCols(df), n)
-    catalog.savePyramidState(id, st, zMin, zMax, metricCols(df))
-    val (stored, _, _, mc) = catalog.loadPyramidState(id).get // read back: bounded lineage
-    catalog.savePyramid(id, TilePyramid.finalizePyramid(stored, df, zMin, zMax, opts, mc))
+    val st = TilePyramid.cellState(df, zMin, zMax, opts, metricCols(df), catMetaCols(df), df.count())
+    writePyramid(id, st, zMin, zMax, metricCols(df), df)
+  }
+
+  /** The one pyramid-write step: persist the state, read it back
+    * (bounded lineage) and rewrite the served pyramid from it. `full` is
+    * the dataset the state covers (small cells explode back from it).
+    */
+  private def writePyramid(id: String, st: PyramidState, zMin: Int, zMax: Int,
+                           mc: Seq[String], full: DataFrame): String = {
+    catalog.savePyramidState(id, st, zMin, zMax, mc)
+    val (stored, _, _, storedMc) = catalog.loadPyramidState(id).get
+    catalog.savePyramid(id, TilePyramid.finalizePyramid(stored, full, zMin, zMax, opts, storedMc))
+  }
+
+  /** Maintain a persisted pyramid after a write left the dataset with
+    * `n` points: `update` (given the current dataset) derives the next
+    * state of the same epoch while `n` stays in the state's density
+    * band; crossing a band changes the grid, so the epoch is rebuilt
+    * from the whole dataset at the new count.
+    */
+  private def maintainPyramid(id: String, st: PyramidState, zMin: Int, zMax: Int,
+                              mc: Seq[String], n: Long)(update: DataFrame => PyramidState): Unit = {
+    val full = load(id)
+    val next =
+      if (TilePyramid.densityBand(n) == TilePyramid.densityBand(st.densityN)) update(full)
+      else TilePyramid.cellState(full, zMin, zMax, opts, mc, st.metaCounts.map(_._1), n)
+    writePyramid(id, next, zMin, zMax, mc, full)
   }
 
   /** Append an ingest batch to a dataset and update its persisted
     * pyramid INCREMENTALLY: aggregate only the batch into a partial
     * state (grid pinned to the epoch's density count), merge with the
     * stored state — exact and associative, so the result is bit-for-bit
-    * what a full rebuild would produce — and re-finalize. Falls back to
-    * a full rebuild only when the corpus crosses a density band
-    * (5k/50k: the grid itself would change) or no state exists yet.
-    * Returns the updated catalog info.
+    * what a full rebuild would produce — and re-finalize
+    * ([[maintainPyramid]]). Returns the updated catalog info.
     */
   def appendAndMaintain(id: String, batch: DataFrame): Catalog#SavedInfo = {
     val info = catalog.append(batch, id)
-    catalog.loadPyramidState(id) match {
-      case Some((st, zMin, zMax, mc)) =>
-        val full = load(id)
-        if (TilePyramid.densityBand(info.numPoints) == TilePyramid.densityBand(st.densityN)) {
-          // same epoch: aggregate ONLY the batch, pinned to the epoch grid
-          val batchSt = TilePyramid.cellState(batch, zMin, zMax, opts, mc,
-            st.metaCounts.map(_._1), st.densityN)
-          catalog.savePyramidState(id, TilePyramid.mergeStates(st, batchSt), zMin, zMax, mc)
-        } else {
-          // band crossed: the grid changes — rebuild the epoch at the new count
-          val newSt = TilePyramid.cellState(full, zMin, zMax, opts, mc,
-            st.metaCounts.map(_._1), info.numPoints)
-          catalog.savePyramidState(id, newSt, zMin, zMax, mc)
-        }
-        val (stored, _, _, mc2) = catalog.loadPyramidState(id).get
-        catalog.savePyramid(id, TilePyramid.finalizePyramid(stored, full, zMin, zMax, opts, mc2))
-      case None => () // no pyramid yet — nothing to maintain
-    }
+    catalog.loadPyramidState(id).foreach { case (st, zMin, zMax, mc) =>
+      // same epoch: aggregate ONLY the batch, pinned to the epoch grid
+      maintainPyramid(id, st, zMin, zMax, mc, info.numPoints)(_ =>
+        TilePyramid.mergeStates(st, TilePyramid.cellState(batch, zMin, zMax, opts, mc,
+          st.metaCounts.map(_._1), st.densityN)))
+    } // no pyramid yet — nothing to maintain
     info
   }
 
@@ -149,10 +160,8 @@ final class ClusterEngine(val spark: SparkSession, warehouseDir: String,
     * state ([[graft.operators.TilePyramid.deleteFromState]]; decimal/
     * count accumulators subtract exactly, min-ids re-derive only where
     * lost), so the maintained pyramid is bit-for-bit what a rebuild
-    * without those points would produce. Falls back to a full rebuild
-    * only when the shrunken corpus crosses a density band (the grid
-    * itself would change) — the same epoch contract as the append
-    * path. The dataset itself is tombstoned ([[graft.sources.Catalog
+    * without those points would produce ([[maintainPyramid]]). The
+    * dataset itself is tombstoned ([[graft.sources.Catalog
     * .deletePoints]]), so the live query paths exclude the points
     * immediately; [[graft.sources.Catalog.compactPoints]] reclaims the
     * space later. Returns the updated catalog info.
@@ -166,32 +175,18 @@ final class ClusterEngine(val spark: SparkSession, warehouseDir: String,
     // the tombstone append.
     val delRows = state.map { _ =>
       val d = load(id)
-        .join(ids.select(ids.columns.headOption.map(org.apache.spark.sql.functions.col)
-          .getOrElse(org.apache.spark.sql.functions.col("id"))
+        .join(ids.select(ids.columns.headOption.map(col).getOrElse(col("id"))
           .cast("long").as("id")).distinct(), Seq("id"), "left_semi")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist(StorageLevel.MEMORY_AND_DISK)
       d.count()
       d
     }
     val info = catalog.deletePoints(id, ids)
-    state match {
-      case Some((st, zMin, zMax, mc)) =>
-        val full = load(id) // fresh handle: tombstones now applied
-        if (TilePyramid.densityBand(info.numPoints) == TilePyramid.densityBand(st.densityN)) {
-          catalog.savePyramidState(id,
-            TilePyramid.deleteFromState(st, delRows.get, full, zMin, zMax, opts, mc),
-            zMin, zMax, mc)
-        } else {
-          // band crossed: the grid changes — rebuild the epoch at the new count
-          catalog.savePyramidState(id,
-            TilePyramid.cellState(full, zMin, zMax, opts, mc,
-              st.metaCounts.map(_._1), info.numPoints),
-            zMin, zMax, mc)
-        }
-        val (stored, _, _, mc2) = catalog.loadPyramidState(id).get
-        catalog.savePyramid(id, TilePyramid.finalizePyramid(stored, full, zMin, zMax, opts, mc2))
-      case None => () // no pyramid yet — nothing to maintain
-    }
+    state.foreach { case (st, zMin, zMax, mc) =>
+      // `full` is a fresh handle: the tombstones are applied
+      maintainPyramid(id, st, zMin, zMax, mc, info.numPoints)(full =>
+        TilePyramid.deleteFromState(st, delRows.get, full, zMin, zMax, opts, mc))
+    } // no pyramid yet — nothing to maintain
     delRows.foreach(_.unpersist())
     info
   }
@@ -210,7 +205,7 @@ final class ClusterEngine(val spark: SparkSession, warehouseDir: String,
     val existing = catalog.maxIssuedId(id)
     appendAndMaintain(id,
       PointGen.uniformPoints(spark, numPoints, Bounds.World, seed)
-        .withColumn("id", org.apache.spark.sql.functions.col("id") + existing))
+        .withColumn("id", col("id") + existing))
   }
 
   /** Serve a viewport from the precomputed pyramid: a pure scan with
@@ -226,12 +221,9 @@ final class ClusterEngine(val spark: SparkSession, warehouseDir: String,
   def getClustersFromPyramid(id: String, zoom: Int, bounds: Bounds): DataFrame = {
     val tiles = Catalog.tilesFor(bounds)
     catalog.loadPyramid(id)
-      .filter(org.apache.spark.sql.functions.col("zoom") === zoom &&
-        org.apache.spark.sql.functions.col("tile_z5").isin(tiles: _*) &&
-        org.apache.spark.sql.functions.col("lon") >= bounds.minLon &&
-        org.apache.spark.sql.functions.col("lon") <= bounds.maxLon &&
-        org.apache.spark.sql.functions.col("lat") >= bounds.minLat &&
-        org.apache.spark.sql.functions.col("lat") <= bounds.maxLat)
+      .filter(col("zoom") === zoom && col("tile_z5").isin(tiles: _*) &&
+        col("lon") >= bounds.minLon && col("lon") <= bounds.maxLon &&
+        col("lat") >= bounds.minLat && col("lat") <= bounds.maxLat)
       .drop("tile_z5")
   }
 
@@ -245,19 +237,13 @@ final class ClusterEngine(val spark: SparkSession, warehouseDir: String,
     * stats need the raw points and stay on [[getSummary]].
     */
   def getSummaryFromPyramid(id: String, zoom: Int, bounds: Bounds): DataFrame = {
-    import org.apache.spark.sql.functions._
     val slice = getClustersFromPyramid(id, zoom, bounds)
     val mc = metricCols(slice)
     val aggs = Seq(
       sum(col("count")).as("total_points"),
       sum(when(col("is_cluster"), 1L).otherwise(0L)).as("num_clusters"),
       sum(when(col("is_cluster"), 0L).otherwise(1L)).as("num_single_points")
-    ) ++ mc.flatMap { m =>
-      Seq(min(col(m)).as(s"${m}_min"), max(col(m)).as(s"${m}_max"),
-        GridCluster.exactSum(col(m)).as(s"${m}_sum"))
-    }
-    val base = slice.agg(aggs.head, aggs.tail: _*)
-    mc.foldLeft(base)((df, m) => df.withColumn(s"${m}_avg",
-      col(s"${m}_sum") / (col("num_clusters") + col("num_single_points"))))
+    ) ++ Summary.metricStats(mc)
+    Summary.withMetricAvgs(slice.agg(aggs.head, aggs.tail: _*), mc)
   }
 }

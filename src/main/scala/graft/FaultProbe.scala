@@ -93,11 +93,14 @@ object FaultProbe {
       "java.base/sun.nio.ch", "java.base/sun.nio.cs",
       "java.base/sun.security.action", "java.base/sun.util.calendar")
       .map(p => s"--add-opens=$p=ALL-UNNAMED").mkString(" ")
+    // executors load the program's classes from where this run loaded
+    // them (the build's classes directory, or a jar)
+    val classes = new java.io.File(getClass.getProtectionDomain.getCodeSource.getLocation.toURI).getPath
     // 8 shuffle partitions across the cluster's two 4-core executors
     val spark = Session.builder("graft-fault", threads = 8)
       .master("local-cluster[2,4,4096]")
       .config("spark.executor.memory", "3g")
-      .config("spark.executor.extraClassPath", "/root/repo/target/scala-2.13/classes")
+      .config("spark.executor.extraClassPath", classes)
       .config("spark.executor.extraJavaOptions", addOpens)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

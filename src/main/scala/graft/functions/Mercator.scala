@@ -24,25 +24,30 @@ object Mercator {
   def clampLat(lat: Column): Column =
     greatest(lit(-MaxLat), least(lit(MaxLat), lat))
 
-  /** Projected x in [0, 2^z·extent]. `se` = 2^zoom · extent. */
-  def projX(lon: Column, se: Double): Column =
-    (lon + lit(180.0)) / lit(360.0) * lit(se)
+  /** Projected x in [0, 2^z·extent]. `se` = 2^zoom · extent, a
+    * literal for one zoom or a per-row column across a zoom range.
+    */
+  def projX(lon: Column, se: Column): Column =
+    (lon + lit(180.0)) / lit(360.0) * se
+  def projX(lon: Column, se: Double): Column = projX(lon, lit(se))
 
   /** Projected y in [0, 2^z·extent]; grows southward (Mercator flip). */
-  def projY(lat: Column, se: Double): Column = {
+  def projY(lat: Column, se: Column): Column = {
     val s = sin(clampLat(lat) * lit(math.Pi) / lit(180.0))
-    (lit(0.5) - lit(0.25) * log((lit(1.0) + s) / (lit(1.0) - s)) / lit(math.Pi)) * lit(se)
+    (lit(0.5) - lit(0.25) * log((lit(1.0) + s) / (lit(1.0) - s)) / lit(math.Pi)) * se
   }
+  def projY(lat: Column, se: Double): Column = projY(lat, lit(se))
 
   /** Inverse of [[projX]]. */
   def invX(px: Column, se: Double): Column =
     px / lit(se) * lit(360.0) - lit(180.0)
 
   /** Inverse of [[projY]]. */
-  def invY(py: Column, se: Double): Column = {
-    val y2 = (lit(1.0) - py / lit(se) * lit(2.0)) * lit(math.Pi)
+  def invY(py: Column, se: Column): Column = {
+    val y2 = (lit(1.0) - py / se * lit(2.0)) * lit(math.Pi)
     (atan(exp(y2)) * lit(2.0) - lit(math.Pi / 2)) * lit(180.0) / lit(math.Pi)
   }
+  def invY(py: Column, se: Double): Column = invY(py, lit(se))
 
   // Driver-side scalar mirrors (for projecting query bounds — the same
   // math the reference runs at cluster/cluster.go:896-906).

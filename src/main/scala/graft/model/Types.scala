@@ -9,11 +9,6 @@ package graft.model
 final case class Bounds(minLon: Double, minLat: Double, maxLon: Double, maxLat: Double) {
   def contains(lon: Double, lat: Double): Boolean =
     lon >= minLon && lon <= maxLon && lat >= minLat && lat <= maxLat
-  def intersects(o: Bounds): Boolean =
-    minLon <= o.maxLon && maxLon >= o.minLon && minLat <= o.maxLat && maxLat >= o.minLat
-  def extend(o: Bounds): Bounds =
-    Bounds(math.min(minLon, o.minLon), math.min(minLat, o.minLat),
-           math.max(maxLon, o.maxLon), math.max(maxLat, o.maxLat))
 }
 
 object Bounds {

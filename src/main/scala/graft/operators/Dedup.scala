@@ -113,13 +113,6 @@ object Dedup {
     docs.select(col(idCol), shingles3(col(textCol)).as("s"))
       .filter(size(col("s")) >= 1)
 
-  /** Exploded posting list carrying the doc's set size on every row —
-    * so no downstream stage ever joins back to a per-doc size table.
-    */
-  private def postings(sh: DataFrame, idCol: String): DataFrame =
-    sh.select(col(idCol).as("id"), size(col("s")).as("len"),
-      explode(col("s")).as("shingle"))
-
   /** Spark conf knob selecting the corpus-side strategy of
     * [[verifyJaccardImpl]] for the entry points that use the
     * string-array verify (minhashPairs / minhashLsh / containment).
@@ -1117,7 +1110,7 @@ object Dedup {
   }
 
   /** The per-doc block table (doc, blk, btxt) behind
-    * [[repeatedBlockFilter]] and [[graft.sources.BlockIndex]]: text cut
+    * [[repeatedBlockFilter]]: text cut
     * into non-overlapping `blockLen`-token blocks (final block may be
     * short), positions kept for order-preserving reassembly.
     */

@@ -11,11 +11,17 @@ import org.apache.spark.sql.expressions.Window
   * distinct value among the cluster's members.
   *
   * Pure relational rewrite (no UDAF — SURVEY §2.10): groupBy(cell,
-  * value) counts → per-cell window total → fraction → canonical sorted
-  * "value:ppm" string per cluster. The reference emits fractions 0..1
-  * as a JSON map (cluster.go:272-284); we emit integer parts-per-million
-  * in a deterministically ordered string so results are exact and
+  * value) counts ([[cellCounts]]) → per-cell window total → fraction →
+  * canonical sorted "value:ppm" string per cluster ([[countsToFreq]]).
+  * The reference emits fractions 0..1 as a JSON map
+  * (cluster.go:272-284); we emit integer parts-per-million in a
+  * deterministically ordered string so results are exact and
   * hash-comparable (fractions are reconstructable as ppm/1e6).
+  *
+  * The two steps are the frequency half of the shared clustering core:
+  * [[GridCluster.finalizeCells]] joins the strings onto the clusters of
+  * the live query and of the pyramid, and [[Summary]] reuses
+  * [[countsToFreq]] for its viewport distributions.
   *
   * Scale: two shuffles on (cell, value) then (cell) — both map-side
   * combined; the window runs over the already-aggregated (cell, value)
@@ -24,39 +30,18 @@ import org.apache.spark.sql.expressions.Window
 object FrequencyRollup {
 
   /** Frequency strings for every cluster (cells with ≥ minPoints
-    * members). Output: id (min member id), count, one `{c}_freq` string
-    * column per requested metadata column.
+    * members): the cluster rows of [[GridCluster.cluster]], projected.
+    * Output: id (min member id), count, one `{c}_freq` string column per
+    * requested metadata column; a cluster whose members all lack a key
+    * has a null `{c}_freq` (the reference just omits the key).
     */
   def clusterFrequencies(points: DataFrame, zoom: Int, bounds: Bounds,
                          opts: ClusterOptions = ClusterOptions(),
                          metaCols: Seq[String] = Nil,
-                         idCol: String = "id"): DataFrame = {
-    val (celled, _, _) = GridCluster.cellAssign(points, zoom, bounds, opts)
-
-    val cellAgg = celled.groupBy(col("cell_x"), col("cell_y"))
-      .agg(count(lit(1)).as("cnt"), min(col(idCol)).as("min_id"))
-      .filter(col("cnt") >= opts.minPoints)
-
-    // left join: a cluster whose members all lack a key still appears,
-    // with a null frequency column (the reference just omits the key).
-    cellFrequencies(celled, metaCols)
-      .foldLeft(cellAgg)((acc, f) => acc.join(f, Seq("cell_x", "cell_y"), "left"))
-      .select(col("min_id").as(idCol) +: col("cnt").as("count") +:
-        metaCols.map(c => col(s"${c}_freq")): _*)
-  }
-
-  /** One `(keyCols..., {c}_freq)` frame per metadata column — the
-    * per-cell canonical "value:ppm" strings. Shared by
-    * [[clusterFrequencies]], [[GridCluster.cluster]] and
-    * [[TilePyramid.build]] (which join them onto their cluster output,
-    * mirroring the reference's metadata-bearing `ClusterNode` —
-    * cluster/cluster.go:1939-1944). `keyCols` is the cell key: the
-    * viewport operators group per (cell_x, cell_y); the pyramid adds the
-    * zoom dimension.
-    */
-  def cellFrequencies(celled: DataFrame, metaCols: Seq[String],
-                      keyCols: Seq[String] = Seq("cell_x", "cell_y")): Seq[DataFrame] =
-    metaCols.map(c => countsToFreq(cellCounts(celled, c, keyCols), c, keyCols))
+                         idCol: String = "id"): DataFrame =
+    GridCluster.cluster(points, zoom, bounds, opts, Nil, metaCols, idCol)
+      .filter(col("is_cluster"))
+      .select(col(idCol) +: col("count") +: metaCols.map(c => col(s"${c}_freq")): _*)
 
   /** Per-(key, value) occurrence counts — the MERGEABLE form of a
     * frequency rollup (counts are associative where ppm strings are
@@ -73,7 +58,9 @@ object FrequencyRollup {
       .agg(count(lit(1)).as("vc"))
 
   /** Canonical sorted "value:ppm" strings from a [[cellCounts]] table.
-    * Output: keyCols..., {c}_freq.
+    * ppm = round(count·1e6/total) — exact integer arithmetic into one
+    * double division, identical across engines. With no `keyCols` the
+    * whole table is one group. Output: keyCols..., {c}_freq.
     */
   def countsToFreq(counts: DataFrame, c: String, keyCols: Seq[String]): DataFrame = {
     val keys = keyCols.map(col)

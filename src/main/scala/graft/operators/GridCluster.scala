@@ -44,23 +44,20 @@ object GridCluster {
     */
   def exactSum(c: Column): Column = sum(c.cast(DecimalType(18, 2))).cast(DoubleType)
 
-  /** Order-independent SUM for arbitrary doubles (projected coords):
-    * each value rounds once to 6 decimals (deterministic per element),
-    * the decimal sum is exact, the total converts back to double — so
-    * centroid numerators don't depend on fp addition order across
-    * partitions/engines. Scale 6 keeps integer+fraction digits ≤ 15,
-    * inside the zone where a double's shortest decimal representation
-    * (what JVM BigDecimal.valueOf sees) is faithful to its exact
-    * expansion — at scale 12 the two disagree in the last digit and
-    * engines drift by ~1e-12 per element.
-    */
-  def stableSum(c: Column): Column = sum(c.cast(DecimalType(38, 6))).cast(DoubleType)
+  // Exact accumulator types of a cell aggregate (kept by the pyramid's
+  // persisted state; the finalize casts to double, a widening cast).
+  // Σlon: x is linear in lon, so invX(mean(projX(lon))) ≡ mean(lon), an
+  // exact decimal mean of the raw coordinates. Σpy: y is nonlinear in
+  // lat; each py rounds once to 6 decimals, so the sum does not depend on
+  // fp addition order (scale 6 keeps ≤ 15 significant digits, where a
+  // double's shortest decimal form is faithful — at scale 12 engines
+  // drift by ~1e-12 per element). Metric sums: as [[exactSum]].
+  private[operators] val SlonType = DecimalType(38, 10)
+  private[operators] val SyType = DecimalType(38, 6)
+  private[operators] val MetricType = DecimalType(38, 2)
 
-  // Longitude centroids use a linearity shortcut instead of stableSum:
-  // x is linear in lon, so invX(mean(projX(lon))) ≡ mean(lon), computed
-  // exactly as a DECIMAL(28,10) sum of the raw coordinates (scale 10 ⊇
-  // any realistic coordinate precision). Latitude has no such shortcut
-  // (Mercator y is nonlinear in lat) and keeps the projected mean.
+  /** The viewport query's cell key; the pyramid puts `zoom` in front. */
+  val CellKey: Seq[String] = Seq("cell_x", "cell_y")
 
   /** Project points and filter them to the viewport at `zoom`.
     * Output = input columns + `px`, `py` (projected coords).
@@ -125,7 +122,88 @@ object GridCluster {
     (celled, se, cs)
   }
 
-  /** Full viewport clustering query.
+  /** The cell aggregate shared by [[cluster]] and
+    * [[TilePyramid.cellState]]: per `key`, `cnt`, exact decimal `slon`
+    * (Σlon) and `sy` (Σpy), `min_id` (the cluster id) and one exact
+    * decimal `sum_{m}` per metric, optionally the sorted member ids as
+    * `children`. `celled` carries `py` and the key columns.
+    */
+  def cellAggregate(celled: DataFrame, key: Seq[String], metricCols: Seq[String],
+                    idCol: String, lonCol: String, includeChildren: Boolean = false): DataFrame = {
+    val aggs = Seq(
+      count(lit(1)).as("cnt"),
+      sum(col(lonCol).cast(DecimalType(28, 10))).cast(SlonType).as("slon"),
+      sum(col("py").cast(SyType)).cast(SyType).as("sy"),
+      min(col(idCol)).as("min_id")
+    ) ++ metricCols.map(m =>
+      sum(col(m).cast(DecimalType(18, 2))).cast(MetricType).as(s"sum_$m")) ++
+      (if (includeChildren)
+        Seq(array_join(transform(sort_array(collect_list(col(idCol))),
+          e => e.cast("string")), ",").as("children"))
+      else Nil)
+    celled.groupBy(key.map(col): _*).agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** Clusters and explode-back singles from a [[cellAggregate]] — the
+    * one finalize of the live query and the pyramid (the reference's
+    * `createCluster`, cluster/cluster.go:1895-1950). Cells with ≥
+    * `minPoints` members become clusters carrying their `{c}_freq`
+    * strings ([[FrequencyRollup.countsToFreq]] over `metaCounts`); the
+    * centroid is Σlon/cnt and the inverse-projected Σpy/cnt at scale
+    * `se` (2^zoom · extent, a literal or a per-row column). Smaller
+    * cells explode back to their member rows of `celled`.
+    * @param key cell key; the columns in front of [[CellKey]] lead the output
+    * @return columns: <key minus cell_x/cell_y>, id, lon, lat, count,
+    *         is_cluster, <metricCols...>, <metaCols..._freq>[, children]
+    */
+  def finalizeCells(cells: DataFrame, metaCounts: Seq[(String, DataFrame)], celled: DataFrame,
+                    key: Seq[String], se: Column, minPoints: Int, metricCols: Seq[String],
+                    idCol: String, lonCol: String, latCol: String,
+                    includeChildren: Boolean = false): DataFrame = {
+    val lead = key.diff(CellKey).map(col)
+    val metaCols = metaCounts.map(_._1)
+
+    // frequency maps join on the SAME cell key right after the same-key
+    // agg — co-partitioned, no new shuffle pattern
+    val withFreqs = metaCounts
+      .map { case (c, counts) => FrequencyRollup.countsToFreq(counts, c, key) }
+      .foldLeft(cells.filter(col("cnt") >= minPoints))((acc, f) => acc.join(f, key, "left"))
+
+    val clusters = withFreqs
+      .select(
+        lead ++ Seq(col("min_id").as(idCol),
+          (col("slon").cast(DoubleType) / col("cnt")).as(lonCol),
+          Mercator.invY(col("sy").cast(DoubleType) / col("cnt"), se).as(latCol),
+          col("cnt").as("count"), lit(true).as("is_cluster")
+        ) ++ metricCols.map(m => col(s"sum_$m").cast(DoubleType).as(m))
+          ++ metaCols.map(c => col(s"${c}_freq"))
+          ++ (if (includeChildren) Seq(col("children")) else Nil): _*)
+
+    // Two-pass explode-back (SURVEY §7.4): cells below MinPoints emit
+    // their member points unchanged (reference "single point cluster",
+    // cluster.go:1952-1968). Same-key join right after the same-key agg
+    // → co-partitioned; AQE broadcasts when the small-cell set is small.
+    val smallCells = cells.filter(col("cnt") < minPoints).select(key.map(col): _*)
+    // Singles keep their raw coordinates: unproject∘project is the
+    // identity up to fp noise, so emitting the original values is the
+    // exact form of the reference's float32 round-trip.
+    val singles = celled
+      .join(smallCells, key, "left_semi")
+      .select(
+        lead ++ Seq(col(idCol), col(lonCol), col(latCol),
+          lit(1L).as("count"), lit(false).as("is_cluster")
+        ) ++ metricCols.map(m => col(m))
+          // a single point's frequency map is its own value at 100%
+          ++ metaCols.map(c => when(col(c).isNotNull,
+            concat(col(c).cast("string"), lit(":1000000"))).as(s"${c}_freq"))
+          // a single point's child list is itself
+          ++ (if (includeChildren) Seq(col(idCol).cast("string").as("children")) else Nil): _*)
+
+    clusters.unionByName(singles)
+  }
+
+  /** Full viewport clustering query: [[cellAssign]] →
+    * [[cellAggregate]] → [[finalizeCells]] on [[CellKey]].
     *
     * @param metricCols double metric columns to SUM per cluster (exact
     *                   decimal sums; singles carry their raw values)
@@ -151,65 +229,9 @@ object GridCluster {
               idCol: String = "id", lonCol: String = "lon", latCol: String = "lat",
               includeChildren: Boolean = false): DataFrame = {
     val (celled, se, _) = cellAssign(points, zoom, bounds, opts, lonCol, latCol)
-
-    val aggs = Seq(
-      count(lit(1)).as("cnt"),
-      sum(col(lonCol).cast(DecimalType(28, 10))).cast(DoubleType).as("slon"),
-      stableSum(col("py")).as("sy"),
-      min(col(idCol)).as("min_id")
-    ) ++ metricCols.map(m => exactSum(col(m)).as(s"sum_$m")) ++
-      (if (includeChildren)
-        Seq(array_join(transform(sort_array(collect_list(col(idCol))),
-          e => e.cast("string")), ",").as("children"))
-      else Nil)
-
-    val cellAgg = celled.groupBy(col("cell_x"), col("cell_y")).agg(aggs.head, aggs.tail: _*)
-
-    // frequency maps join on the SAME (cell_x, cell_y) key right after
-    // the same-key agg — co-partitioned, no new shuffle pattern
-    val withFreqs = FrequencyRollup.cellFrequencies(celled, metaCols)
-      .foldLeft(cellAgg.filter(col("cnt") >= opts.minPoints))(
-        (acc, f) => acc.join(f, Seq("cell_x", "cell_y"), "left"))
-
-    val clusters = withFreqs
-      .select(
-        Seq(
-          col("min_id").as(idCol),
-          // x is linear in lon: invX(mean(px)) ≡ mean(lon), computed
-          // exactly in decimal (see exactLonMean doc)
-          (col("slon") / col("cnt")).as(lonCol),
-          Mercator.invY(col("sy") / col("cnt"), se).as(latCol),
-          col("cnt").as("count"),
-          lit(true).as("is_cluster")
-        ) ++ metricCols.map(m => col(s"sum_$m").as(m))
-          ++ metaCols.map(c => col(s"${c}_freq"))
-          ++ (if (includeChildren) Seq(col("children")) else Nil): _*)
-
-    // Two-pass explode-back (SURVEY §7.4): cells below MinPoints emit
-    // their member points unchanged (reference "single point cluster",
-    // cluster.go:1952-1968). Same-key join right after the same-key agg
-    // → co-partitioned; AQE broadcasts when the small-cell set is small.
-    val smallCells = cellAgg.filter(col("cnt") < opts.minPoints).select("cell_x", "cell_y")
-    // Singles keep their raw coordinates: unproject∘project is the
-    // identity up to fp noise, so emitting the original values is the
-    // exact form of the reference's float32 round-trip
-    // (cluster.go:1952-1968).
-    val singles = celled
-      .join(smallCells, Seq("cell_x", "cell_y"), "left_semi")
-      .select(
-        Seq(
-          col(idCol),
-          col(lonCol),
-          col(latCol),
-          lit(1L).as("count"),
-          lit(false).as("is_cluster")
-        ) ++ metricCols.map(m => col(m))
-          // a single point's frequency map is its own value at 100%
-          ++ metaCols.map(c => when(col(c).isNotNull,
-            concat(col(c).cast("string"), lit(":1000000"))).as(s"${c}_freq"))
-          // a single point's child list is itself
-          ++ (if (includeChildren) Seq(col(idCol).cast("string").as("children")) else Nil): _*)
-
-    clusters.unionByName(singles)
+    val cells = cellAggregate(celled, CellKey, metricCols, idCol, lonCol, includeChildren)
+    val counts = metaCols.map(c => c -> FrequencyRollup.cellCounts(celled, c, CellKey))
+    finalizeCells(cells, counts, celled, CellKey, lit(se), opts.minPoints, metricCols,
+      idCol, lonCol, latCol, includeChildren)
   }
 }

@@ -87,50 +87,6 @@ object RangeRank {
       .drop("_bucket", "_off")
   }
 
-  /** PER-GROUP exact rank without a per-group-spanning window — the
-    * grouped sibling of [[withGlobalRank]] for low-cardinality group
-    * keys (a `Window.partitionBy(event_type)` with 5 types serializes
-    * a fifth of the corpus through one task; this splits every group
-    * across `nBuckets` parallel windows instead). Boundaries come from
-    * one grouped min/max pass (uniform-width buckets); offsets are
-    * per-(group, bucket) cumulative counts via the same triangular
-    * self-join keyed by group. `grpCols` must identify the group
-    * uniquely.
-    */
-  def withGroupedRank(df: DataFrame, grpCols: Seq[String], key: Column,
-                      tieBreak: Seq[Column], desc: Boolean = false,
-                      nBuckets: Int = 32, out: String = "rn"): DataFrame = {
-    val in = CachePool.track(df)
-    val mm = in.groupBy(grpCols.map(col): _*)
-      .agg(min(key.cast("double")).as("_lo"), max(key.cast("double")).as("_hi"))
-    val k = key.cast("double")
-    val asc = when(col("_hi") === col("_lo"), lit(1L))
-      .otherwise(least(width_bucket(k, col("_lo"), col("_hi"), lit(nBuckets)),
-        lit(nBuckets.toLong)))
-    val cnt = if (desc) lit(nBuckets.toLong + 1) - asc else asc
-    val b = in.join(broadcast(mm), grpCols)
-      .withColumn("_bucket", cnt)
-      .drop("_lo", "_hi")
-    // per is ≤ |groups|·nBuckets rows but COSTS a corpus pass — and it
-    // feeds both sides of the triangular join (and, in rank-select, the
-    // two broadcast builds). Persist it or every tiny consumer
-    // re-scans the corpus.
-    val per = CachePool.track(
-      b.groupBy((grpCols :+ "_bucket").map(col): _*).agg(count(lit(1)).as("_v")))
-    val lower = per.select((grpCols.map(c => col(c).as(s"_g_$c")) :+
-      col("_bucket").as("_pb") :+ col("_v").as("_pv")): _*)
-    val cond = grpCols.map(c => col(c) === col(s"_g_$c")).reduce(_ && _) &&
-      col("_pb") < col("_bucket")
-    val offsets = per.join(lower, cond, "left")
-      .groupBy((grpCols :+ "_bucket").map(col): _*)
-      .agg(coalesce(sum(col("_pv")), lit(0L)).as("_off"))
-    val w = Window.partitionBy((grpCols :+ "_bucket").map(col): _*)
-      .orderBy(ordering(key, tieBreak, desc): _*)
-    b.join(broadcast(offsets), grpCols :+ "_bucket")
-      .withColumn(out, row_number().over(w).cast("long") + col("_off"))
-      .drop("_bucket", "_off")
-  }
-
   /** Exact per-group ORDER STATISTICS without ranking the group: for
     * each group, return the rows sitting at the 1-based ranks given by
     * `rankExprs` (SQL expressions over the group's row count `n`,

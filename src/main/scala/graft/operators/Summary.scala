@@ -71,11 +71,8 @@ object Summary {
             Seq("cell_x", "cell_y"), "left_semi")
           .select(metricCols.map(m => col(m)): _*))
 
-    val metricAggs: Seq[Column] = metricCols.flatMap { m =>
-      Seq(min(col(m)).as(s"${m}_min"), max(col(m)).as(s"${m}_max"),
-        GridCluster.exactSum(col(m)).as(s"${m}_sum"))
-    }
-    val metricStats =
+    val metricAggs = metricStats(metricCols)
+    val clusterStats =
       if (metricAggs.isEmpty) null
       else clusterLevel.agg(metricAggs.head, metricAggs.tail: _*)
 
@@ -95,27 +92,35 @@ object Summary {
       else withMeta.agg(pointAggs.head, pointAggs.tail: _*)
 
     // Categorical distributions as canonical sorted value:ppm strings.
-    // ppm = round(count*1e6/total) — exact integer arithmetic into one
-    // double division, identical across engines.
+    // Unlike a cluster rollup ([[FrequencyRollup.cellCounts]]), the
+    // counts keep the null value, so nulls stay in the denominator.
     val catFrames: Seq[DataFrame] = catMetaCols.map { c =>
-      val counts = celled.groupBy(col(c)).agg(count(lit(1)).as("vc"))
-        .withColumn("total", sum(col("vc")).over())
-        .withColumn("ppm", round(col("vc") * lit(1000000.0) / col("total")).cast("long"))
-      counts.agg(
-        array_join(
-          transform(
-            array_sort(collect_list(struct(col(c).as("v"), col("ppm").as("p")))),
-            e => concat(e.getField("v"), lit(":"), e.getField("p").cast("string"))),
-          ",").as(s"${c}_dist"))
+      FrequencyRollup.countsToFreq(celled.groupBy(col(c)).agg(count(lit(1)).as("vc")), c, Nil)
+        .select(col(s"${c}_freq").as(s"${c}_dist"))
     }
 
-    val frames = Seq(Option(base), Option(metricStats), Option(pointStats)).flatten ++ catFrames
+    val frames = Seq(Option(base), Option(clusterStats), Option(pointStats)).flatten ++ catFrames
     val glued = frames.reduce(_ crossJoin _)
 
-    // The quirky reference average: metric sum over cluster-level rows.
-    metricCols.foldLeft(glued) { (df, m) =>
+    withMetricAvgs(glued, metricCols)
+  }
+
+  /** Per-metric statistics over cluster-level rows (cluster sums and
+    * singles' raw values): `{m}_min`, `{m}_max`, exact `{m}_sum`. Shared
+    * with the pyramid's summary, whose rows are cluster-level already.
+    */
+  def metricStats(metricCols: Seq[String]): Seq[Column] =
+    metricCols.flatMap { m =>
+      Seq(min(col(m)).as(s"${m}_min"), max(col(m)).as(s"${m}_max"),
+        GridCluster.exactSum(col(m)).as(s"${m}_sum"))
+    }
+
+  /** The quirky reference average `{m}_avg`: the metric sum over the
+    * number of cluster-level rows (helpers.go:303-311).
+    */
+  def withMetricAvgs(stats: DataFrame, metricCols: Seq[String]): DataFrame =
+    metricCols.foldLeft(stats) { (df, m) =>
       df.withColumn(s"${m}_avg",
         col(s"${m}_sum") / (col("num_clusters") + col("num_single_points")))
     }
-  }
 }

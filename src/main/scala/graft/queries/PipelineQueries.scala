@@ -200,8 +200,6 @@ object PipelineQueries {
   private def dotSqlN(a: String, b: String, n: Int): String =
     (1 to n).map(i => s"CAST($a[$i] AS DOUBLE) * CAST($b[$i] AS DOUBLE)").mkString(" + ")
 
-  private def dotSql(a: String, b: String): String = dotSqlN(a, b, Dims)
-
   private def cosSqlN(a: String, b: String, n: Int): String =
     s"(${dotSqlN(a, b, n)}) / (sqrt(${dotSqlN(a, a, n)}) * sqrt(${dotSqlN(b, b, n)}))"
 

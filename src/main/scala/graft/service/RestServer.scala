@@ -158,6 +158,22 @@ final class RestServer(engine: ClusterEngine, port: Int = 0,
       case e: IllegalArgumentException => Left(Option(e.getMessage).getOrElse("invalid parameters"))
     }
 
+  /** Metric names of a summary row: every `{m}_sum` column. */
+  private def metricNames(row: org.apache.spark.sql.Row): Seq[String] =
+    row.schema.fieldNames.toSeq.filter(_.endsWith("_sum")).map(_.stripSuffix("_sum"))
+
+  /** The `metricsSummary` object of a summary row:
+    * `{m:{Min,Max,Sum,Average}}` per metric.
+    */
+  private def metricsJson(row: org.apache.spark.sql.Row): String =
+    metricNames(row).map { m =>
+      s"${jstr(m)}:{" +
+        s""""Min":${jnum(row.getAs[Double](s"${m}_min"))},""" +
+        s""""Max":${jnum(row.getAs[Double](s"${m}_max"))},""" +
+        s""""Sum":${jnum(row.getAs[Double](s"${m}_sum"))},""" +
+        s""""Average":${jnum(row.getAs[Double](s"${m}_avg"))}}"""
+    }.mkString("{", ",", "}")
+
   // ------------------------------------------------------------- handlers
 
   private def handleList(ex: HttpExchange): Unit =
@@ -176,15 +192,7 @@ final class RestServer(engine: ClusterEngine, port: Int = 0,
       case Right((zoom, bounds)) =>
         val row = engine.getSummary(id, zoom, bounds).collect().head
         val schema = row.schema.fieldNames
-        def has(c: String) = schema.contains(c)
-        val metricNames = schema.filter(_.endsWith("_sum")).map(_.stripSuffix("_sum"))
-        val metrics = metricNames.map { m =>
-          s"${jstr(m)}:{" +
-            s""""Min":${jnum(row.getAs[Double](s"${m}_min"))},""" +
-            s""""Max":${jnum(row.getAs[Double](s"${m}_max"))},""" +
-            s""""Sum":${jnum(row.getAs[Double](s"${m}_sum"))},""" +
-            s""""Average":${jnum(row.getAs[Double](s"${m}_avg"))}}"""
-        }.mkString("{", ",", "}")
+        val metrics = metricNames(row)
         // metadata: numeric → Min/Max/Average, timestamps → Earliest/
         // Latest, categorical dists → value:ppm objects (main.go:281-300)
         val metaEntries =
@@ -198,7 +206,7 @@ final class RestServer(engine: ClusterEngine, port: Int = 0,
               s""""Earliest":${jstr(row.getAs[java.sql.Timestamp](c).toInstant.toString)},""" +
               s""""Latest":${jstr(row.getAs[java.sql.Timestamp](s"${base}_latest").toInstant.toString)}}"""
           } ++
-          schema.filter(c => c.endsWith("_avg") && !metricNames.contains(c.stripSuffix("_avg"))).map { c =>
+          schema.filter(c => c.endsWith("_avg") && !metrics.contains(c.stripSuffix("_avg"))).map { c =>
             val base = c.stripSuffix("_avg")
             s"${jstr(base)}:{" +
               s""""Min":${jnum(row.getAs[Double](s"${base}_min"))},""" +
@@ -207,7 +215,7 @@ final class RestServer(engine: ClusterEngine, port: Int = 0,
           }
         respond(ex, 200,
           s"""{${totalsJson(row)},""" +
-            s""""metricsSummary":$metrics,""" +
+            s""""metricsSummary":${metricsJson(row)},""" +
             s""""metadataSummary":${metaEntries.mkString("{", ",", "}")}}""")
     }
 
@@ -290,17 +298,9 @@ final class RestServer(engine: ClusterEngine, port: Int = 0,
       case Left(m) => err(ex, 400, m)
       case Right((zoom, bounds)) =>
         val row = engine.getSummaryFromPyramid(id, zoom, bounds).collect().head
-        val metricNames = row.schema.fieldNames.filter(_.endsWith("_sum")).map(_.stripSuffix("_sum"))
-        val metrics = metricNames.map { m =>
-          s"${jstr(m)}:{" +
-            s""""Min":${jnum(row.getAs[Double](s"${m}_min"))},""" +
-            s""""Max":${jnum(row.getAs[Double](s"${m}_max"))},""" +
-            s""""Sum":${jnum(row.getAs[Double](s"${m}_sum"))},""" +
-            s""""Average":${jnum(row.getAs[Double](s"${m}_avg"))}}"""
-        }.mkString("{", ",", "}")
         respond(ex, 200,
           s"""{${totalsJson(row)},""" +
-            s""""metricsSummary":$metrics}""")
+            s""""metricsSummary":${metricsJson(row)}}""")
     }
 
   private def handleLoad(ex: HttpExchange, id: String): Unit =

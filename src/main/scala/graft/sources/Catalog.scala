@@ -154,16 +154,20 @@ final class Catalog(spark: SparkSession, warehouseDir: String, maxCached: Int = 
     }
   }
 
-  /** Test hook: force-unpersist every draining frame NOW (callers must
-    * know no request is in flight).
-    */
-  private[graft] def drainNow(): Unit = synchronized {
-    draining.foreach(_._2.unpersist())
-    draining.clear()
-  }
-
   private def dsPath(id: String) = s"$warehouseDir/$id"
   private def pyramidPath(id: String) = s"${dsPath(id)}/_pyramid"
+  private def tombPath(id: String) = s"${dsPath(id)}/_tombstones"
+
+  /** The catalog entry of a dataset that must exist. */
+  private def savedInfo(id: String): SavedInfo =
+    list().find(_.id == id).getOrElse(throw new IllegalArgumentException(s"unknown dataset $id"))
+
+  /** Write a dataset's `_graft_meta.json` (read back by [[list]]). */
+  private def writeMeta(info: SavedInfo): SavedInfo = {
+    Files.writeString(Paths.get(info.path, "_graft_meta.json"),
+      s"""{"id":"${info.id}","numPoints":${info.numPoints},"createdAtMs":${info.createdAtMs},"fileSizeBytes":${info.fileSizeBytes}}""")
+    info
+  }
 
   /** Total on-disk bytes under a dataset dir (the reference's catalog
     * fileSize field — cluster/helpers.go:88-93).
@@ -197,7 +201,7 @@ final class Catalog(spark: SparkSession, warehouseDir: String, maxCached: Int = 
     // a re-save is a NEW dataset: stale tombstones from a previous
     // incarnation must not haunt recycled ids, and a cached handle
     // pins the old file listing
-    val tomb = new java.io.File(s"$path/_tombstones")
+    val tomb = new java.io.File(tombPath(id))
     if (tomb.exists) StagedSwap.rmRf(tomb)
     invalidate(id)
     val obs = org.apache.spark.sql.Observation(s"graft_save_$id")
@@ -213,10 +217,7 @@ final class Catalog(spark: SparkSession, warehouseDir: String, maxCached: Int = 
     // write may still list its files
     dropPyramid(id)
     val n = obs.get("n").asInstanceOf[Long]
-    val info = SavedInfo(id, n, System.currentTimeMillis(), path, dirSize(path))
-    Files.writeString(Paths.get(path, "_graft_meta.json"),
-      s"""{"id":"$id","numPoints":$n,"createdAtMs":${info.createdAtMs},"fileSizeBytes":${info.fileSizeBytes}}""")
-    info
+    writeMeta(SavedInfo(id, n, System.currentTimeMillis(), path, dirSize(path)))
   }
 
   /** Append an ingest batch to an existing dataset (same tile
@@ -225,8 +226,7 @@ final class Catalog(spark: SparkSession, warehouseDir: String, maxCached: Int = 
     * silently miss the new files. Meta counts accumulate.
     */
   def append(points: DataFrame, id: String): SavedInfo = {
-    val prev = list().find(_.id == id).getOrElse(
-      throw new IllegalArgumentException(s"unknown dataset $id"))
+    val prev = savedInfo(id)
     val path = dsPath(id)
     val obs = org.apache.spark.sql.Observation(s"graft_append_${id}_${System.nanoTime()}")
     points
@@ -239,10 +239,7 @@ final class Catalog(spark: SparkSession, warehouseDir: String, maxCached: Int = 
       .parquet(path)
     val added = obs.get("n").asInstanceOf[Long]
     invalidate(id)
-    val info = SavedInfo(id, prev.numPoints + added, prev.createdAtMs, path, dirSize(path))
-    Files.writeString(Paths.get(path, "_graft_meta.json"),
-      s"""{"id":"$id","numPoints":${info.numPoints},"createdAtMs":${info.createdAtMs},"fileSizeBytes":${info.fileSizeBytes}}""")
-    info
+    writeMeta(SavedInfo(id, prev.numPoints + added, prev.createdAtMs, path, dirSize(path)))
   }
 
   /** Persist a precomputed cluster pyramid for a dataset. Layout chosen
@@ -372,7 +369,7 @@ final class Catalog(spark: SparkSession, warehouseDir: String, maxCached: Int = 
         // answer immediately; the anti-join rides the broadcast-small
         // tombstone set and disappears entirely once [[compactPoints]]
         // drops the rows physically
-        val tomb = s"${dsPath(id)}/_tombstones"
+        val tomb = tombPath(id)
         val visible = if (new java.io.File(tomb).exists)
           raw.join(broadcast(spark.read.parquet(tomb).distinct()), Seq("id"), "left_anti")
         else raw
@@ -399,7 +396,7 @@ final class Catalog(spark: SparkSession, warehouseDir: String, maxCached: Int = 
   def maxIssuedId(id: String): Long = {
     val liveMax = Option(load(id).agg(max(col("id"))).head().get(0))
       .map(_.asInstanceOf[Long]).getOrElse(0L)
-    val tomb = s"${dsPath(id)}/_tombstones"
+    val tomb = tombPath(id)
     val tombMax = if (new java.io.File(tomb).exists)
       Option(spark.read.parquet(tomb).agg(max(col("id"))).head().get(0))
         .map(_.asInstanceOf[Long]).getOrElse(0L)
@@ -418,8 +415,7 @@ final class Catalog(spark: SparkSession, warehouseDir: String, maxCached: Int = 
     * Returns the updated catalog info.
     */
   def deletePoints(id: String, ids: DataFrame): SavedInfo = {
-    val prev = list().find(_.id == id).getOrElse(
-      throw new IllegalArgumentException(s"unknown dataset $id"))
+    val prev = savedInfo(id)
     val path = dsPath(id)
     val toRemove = load(id)
       .join(ids.select(ids.columns.headOption.map(col).getOrElse(col("id"))
@@ -429,13 +425,10 @@ final class Catalog(spark: SparkSession, warehouseDir: String, maxCached: Int = 
     // materialize BEFORE touching the directory: the write below must
     // not re-plan against the tombstone files it is creating
     val removed = toRemove.count()
-    toRemove.write.mode("append").parquet(s"$path/_tombstones")
+    toRemove.write.mode("append").parquet(tombPath(id))
     toRemove.unpersist()
     invalidate(id)
-    val info = SavedInfo(id, prev.numPoints - removed, prev.createdAtMs, path, dirSize(path))
-    Files.writeString(Paths.get(path, "_graft_meta.json"),
-      s"""{"id":"$id","numPoints":${info.numPoints},"createdAtMs":${info.createdAtMs},"fileSizeBytes":${info.fileSizeBytes}}""")
-    info
+    writeMeta(SavedInfo(id, prev.numPoints - removed, prev.createdAtMs, path, dirSize(path)))
   }
 
   /** Fraction of STORED points that are tombstoned (dead / (live +
@@ -445,7 +438,7 @@ final class Catalog(spark: SparkSession, warehouseDir: String, maxCached: Int = 
     * dataset scan.
     */
   def deadFraction(id: String): Double = {
-    val tomb = s"${dsPath(id)}/_tombstones"
+    val tomb = tombPath(id)
     if (!new java.io.File(tomb).exists) return 0.0
     val dead = spark.read.parquet(tomb).distinct().count()
     val live = list().find(_.id == id).map(_.numPoints).getOrElse(0L)
@@ -471,13 +464,12 @@ final class Catalog(spark: SparkSession, warehouseDir: String, maxCached: Int = 
     * state, and the tombstone table dies with the old directory.
     */
   def compactPoints(id: String): SavedInfo = {
-    val prev = list().find(_.id == id).getOrElse(
-      throw new IllegalArgumentException(s"unknown dataset $id"))
+    val prev = savedInfo(id)
     val path = dsPath(id)
-    if (new java.io.File(s"$path/_tombstones").exists) {
+    if (new java.io.File(tombPath(id)).exists) {
       val tmp = path + ".compact"
       spark.read.parquet(path)
-        .join(broadcast(spark.read.parquet(s"$path/_tombstones").distinct()),
+        .join(broadcast(spark.read.parquet(tombPath(id)).distinct()),
           Seq("id"), "left_anti")
         .write.mode("overwrite").option("compression", "zstd")
         .partitionBy("tile_z5")
@@ -500,10 +492,7 @@ final class Catalog(spark: SparkSession, warehouseDir: String, maxCached: Int = 
       }
       invalidate(id)
     }
-    val info = SavedInfo(id, prev.numPoints, prev.createdAtMs, path, dirSize(path))
-    Files.writeString(Paths.get(path, "_graft_meta.json"),
-      s"""{"id":"$id","numPoints":${info.numPoints},"createdAtMs":${info.createdAtMs},"fileSizeBytes":${info.fileSizeBytes}}""")
-    info
+    writeMeta(SavedInfo(id, prev.numPoints, prev.createdAtMs, path, dirSize(path)))
   }
 
   /** S6/Q5: list saved datasets from their meta files. */

@@ -1,7 +1,7 @@
 package graft
 
 import graft.model.{Bounds, ClusterOptions}
-import graft.operators.FrequencyRollup
+import graft.operators.{FrequencyRollup, GridCluster, Summary}
 
 /** Ports of the reference's metadata-frequency tests: 50/50 split
   * (cluster_test.go:172-226) and nil-metadata tolerance
@@ -47,5 +47,22 @@ class FrequencyRollupSpec extends SparkSpec {
     val out = FrequencyRollup.clusterFrequencies(df, 0, Bounds.World, opts,
       metaCols = Seq("type")).collect()
     assert(out.length == 1 && out.head.getAs[String]("type_freq") == null)
+  }
+
+  test("viewport _dist counts a null in its denominator; cluster _freq skips it") {
+    val df = Seq(
+      (1L, -74.006, 40.7128, null.asInstanceOf[String]),
+      (2L, -74.007, 40.7129, "store"),
+      (3L, -74.008, 40.7130, "store"),
+      (4L, -74.009, 40.7131, "park")
+    ).toDF("id", "lon", "lat", "type")
+    // the reference's summary divides by every point in the viewport
+    // (the oracle's clusterSummarySql does the same) ...
+    val dist = Summary.viewportSummary(df, 0, Bounds.World, opts, catMetaCols = Seq("type"))
+      .head().getAs[String]("type_dist")
+    assert(dist == "park:250000,store:500000")
+    // ... while a cluster's rollup divides by the members that have the key
+    val freq = GridCluster.cluster(df, 0, Bounds.World, opts, metaCols = Seq("type")).collect()
+    assert(freq.length == 1 && freq.head.getAs[String]("type_freq") == "park:333333,store:666667")
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.model.{Bounds, ClusterOptions}
-import graft.operators.GridCluster
+import graft.operators.{GridCluster, TilePyramid}
 import org.apache.spark.sql.functions._
 
 /** Ports of the reference's end-to-end clustering tests (FIXTURES §A2):
@@ -112,5 +112,27 @@ class GridClusterSpec extends SparkSpec {
       assert(agg.getDecimal(1).compareTo(massIn) == 0, s"zoom $z metric mass conservation")
       assert(agg.getLong(2) >= 1)
     }
+  }
+
+  test("each pyramid zoom slice equals the live query over the world, row for row") {
+    // the pyramid is a materialized view of the live query: both run the
+    // one cell aggregate and finalize, so ids, counts, centroids, metric
+    // sums and _freq strings agree exactly
+    val df = sources.PointGen.uniformPoints(spark, 3000, Bounds.World, seed = 7L)
+    val metrics = Seq("metric_value")
+    val meta = Seq("meta_category")
+    val pyramid = TilePyramid.build(df, 0, 3, opts, metrics, meta).cache()
+    def rows(d: org.apache.spark.sql.DataFrame) = d.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+    var kinds = Set.empty[Boolean]
+    for (z <- 0 to 3) {
+      val live = GridCluster.cluster(df, z, Bounds.World, opts, metrics, meta)
+      val slice = pyramid.filter(col("zoom") === z).drop("zoom")
+      assert(slice.columns.sameElements(live.columns))
+      val (l, p) = (rows(live), rows(slice))
+      assert(l.nonEmpty && l == p, s"zoom $z: live and pyramid rows differ")
+      kinds ++= l.map(_(4).asInstanceOf[Boolean])
+    }
+    assert(kinds == Set(true, false), "fixture must yield both clusters and singles")
+    pyramid.unpersist()
   }
 }
