@@ -1,31 +1,30 @@
 package graft.operators
 
 import graft.model.{Bounds, ClusterOptions}
-import org.apache.spark.sql.DataFrame
+import graft.plans.Functions
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** Per-cluster metadata frequency distributions — the reference's
   * `MetadataStore.CalculateFrequencies` rollup (reference:
   * cluster/cluster.go:209-289): for each metadata key, the share of each
   * distinct value among the cluster's members.
   *
-  * Pure relational rewrite (no UDAF — SURVEY §2.10): groupBy(cell,
-  * value) counts ([[cellCounts]]) → per-cell window total → fraction →
-  * canonical sorted "value:ppm" string per cluster ([[countsToFreq]]).
-  * The reference emits fractions 0..1 as a JSON map
+  * One encoder, [[freqString]] (`graft_freq`, [[graft.plans.FreqString]]):
+  * per group, the canonical sorted "value:ppm" string in one aggregation
+  * pass. The reference emits fractions 0..1 as a JSON map
   * (cluster.go:272-284); we emit integer parts-per-million in a
   * deterministically ordered string so results are exact and
   * hash-comparable (fractions are reconstructable as ppm/1e6).
   *
-  * The two steps are the frequency half of the shared clustering core:
-  * [[GridCluster.finalizeCells]] joins the strings onto the clusters of
-  * the live query and of the pyramid, and [[Summary]] reuses
-  * [[countsToFreq]] for its viewport distributions.
+  * The live query computes its strings inside the cell aggregate
+  * ([[GridCluster.cellAggregate]]) and [[Summary]] inside its point
+  * aggregate. The pyramid keeps the MERGEABLE form, per-(cell, value)
+  * counts ([[cellCounts]]), and encodes them with [[countsToFreq]].
   *
-  * Scale: two shuffles on (cell, value) then (cell) — both map-side
-  * combined; the window runs over the already-aggregated (cell, value)
-  * rows, not raw points.
+  * Scale: one map-side-combined aggregation per group key, no window
+  * and no regroup; the aggregate's buffer is a value → count map, so
+  * memory grows with a group's distinct values, not its members.
   */
 object FrequencyRollup {
 
@@ -57,22 +56,18 @@ object FrequencyRollup {
       .groupBy(keyCols.map(col) :+ col(c): _*)
       .agg(count(lit(1)).as("vc"))
 
-  /** Canonical sorted "value:ppm" strings from a [[cellCounts]] table.
+  /** `graft_freq(value, weight)`: the group's sorted "value:ppm" string,
     * ppm = round(count·1e6/total) — exact integer arithmetic into one
-    * double division, identical across engines. With no `keyCols` the
-    * whole table is one group. Output: keyCols..., {c}_freq.
+    * double division, identical across engines. A null weight skips the
+    * row; a null value counts in the total but has no entry; null when
+    * the total is 0. `value` must be a string column.
     */
-  def countsToFreq(counts: DataFrame, c: String, keyCols: Seq[String]): DataFrame = {
-    val keys = keyCols.map(col)
-    val w = Window.partitionBy(keys: _*)
-    counts
-      .withColumn("total", sum(col("vc")).over(w))
-      .withColumn("ppm", round(col("vc") * lit(1000000.0) / col("total")).cast("long"))
-      .groupBy(keys: _*)
-      .agg(array_join(
-        transform(
-          array_sort(collect_list(struct(col(c).as("v"), col("ppm").as("p")))),
-          e => concat(e.getField("v"), lit(":"), e.getField("p").cast("string"))),
-        ",").as(s"${c}_freq"))
-  }
+  def freqString(value: Column, weight: Column): Column =
+    Functions.call("graft_freq", value, weight)
+
+  /** Canonical sorted "value:ppm" strings from a [[cellCounts]] table,
+    * one per key. Output: keyCols..., {c}_freq.
+    */
+  def countsToFreq(counts: DataFrame, c: String, keyCols: Seq[String]): DataFrame =
+    counts.groupBy(keyCols.map(col): _*).agg(freqString(col(c), col("vc")).as(s"${c}_freq"))
 }

@@ -28,12 +28,15 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   *    (cluster.go:1927), again for determinism.
   *
   * Scale notes (100 TB): the pipeline is one shuffle for the cell
-  * aggregation (map-side partial agg makes the shuffle small) plus one
-  * join of the points against the below-MinPoints cells on the same cell
-  * key (AQE picks broadcast when that set is small, sort-merge when the
-  * viewport is singles-heavy). Never collects; with tile-partitioned
-  * storage ([[graft.sources.Catalog]]) the viewport filter prunes
-  * partitions before any scan.
+  * aggregation — counts, sums, `min_id` and every metadata `{c}_freq`
+  * string ([[FrequencyRollup.freqString]], a value → count map per
+  * cell, so its buffer grows with a cell's distinct values, not its
+  * members) in one pass, map-side partial agg making the shuffle small
+  * — plus one join of the points against the below-MinPoints cells on
+  * the same cell key (AQE picks broadcast when that set is small,
+  * sort-merge when the viewport is singles-heavy). Never collects; with
+  * tile-partitioned storage ([[graft.sources.Catalog]]) the viewport
+  * filter prunes partitions before any scan.
   */
 object GridCluster {
 
@@ -124,12 +127,15 @@ object GridCluster {
 
   /** The cell aggregate shared by [[cluster]] and
     * [[TilePyramid.cellState]]: per `key`, `cnt`, exact decimal `slon`
-    * (Σlon) and `sy` (Σpy), `min_id` (the cluster id) and one exact
-    * decimal `sum_{m}` per metric, optionally the sorted member ids as
-    * `children`. `celled` carries `py` and the key columns.
+    * (Σlon) and `sy` (Σpy), `min_id` (the cluster id), one exact
+    * decimal `sum_{m}` per metric and one `{c}_freq` string per metadata
+    * column (members that lack the value drop out of its denominator),
+    * optionally the sorted member ids as `children`. `celled` carries
+    * `py` and the key columns.
     */
   def cellAggregate(celled: DataFrame, key: Seq[String], metricCols: Seq[String],
-                    idCol: String, lonCol: String, includeChildren: Boolean = false): DataFrame = {
+                    idCol: String, lonCol: String, metaCols: Seq[String] = Nil,
+                    includeChildren: Boolean = false): DataFrame = {
     val aggs = Seq(
       count(lit(1)).as("cnt"),
       sum(col(lonCol).cast(DecimalType(28, 10))).cast(SlonType).as("slon"),
@@ -137,6 +143,8 @@ object GridCluster {
       min(col(idCol)).as("min_id")
     ) ++ metricCols.map(m =>
       sum(col(m).cast(DecimalType(18, 2))).cast(MetricType).as(s"sum_$m")) ++
+      metaCols.map(c =>
+        FrequencyRollup.freqString(col(c), when(col(c).isNotNull, lit(1))).as(s"${c}_freq")) ++
       (if (includeChildren)
         Seq(array_join(transform(sort_array(collect_list(col(idCol))),
           e => e.cast("string")), ",").as("children"))
@@ -147,29 +155,22 @@ object GridCluster {
   /** Clusters and explode-back singles from a [[cellAggregate]] — the
     * one finalize of the live query and the pyramid (the reference's
     * `createCluster`, cluster/cluster.go:1895-1950). Cells with ≥
-    * `minPoints` members become clusters carrying their `{c}_freq`
-    * strings ([[FrequencyRollup.countsToFreq]] over `metaCounts`); the
-    * centroid is Σlon/cnt and the inverse-projected Σpy/cnt at scale
-    * `se` (2^zoom · extent, a literal or a per-row column). Smaller
-    * cells explode back to their member rows of `celled`.
+    * `minPoints` members become clusters carrying the `{c}_freq`
+    * column of `cells` for each of `metaCols`. The centroid is Σlon/cnt
+    * and the inverse-projected Σpy/cnt at scale `se` (2^zoom · extent,
+    * a literal or a per-row column).
+    * Smaller cells explode back to their member rows of `celled`.
     * @param key cell key; the columns in front of [[CellKey]] lead the output
     * @return columns: <key minus cell_x/cell_y>, id, lon, lat, count,
     *         is_cluster, <metricCols...>, <metaCols..._freq>[, children]
     */
-  def finalizeCells(cells: DataFrame, metaCounts: Seq[(String, DataFrame)], celled: DataFrame,
+  def finalizeCells(cells: DataFrame, celled: DataFrame,
                     key: Seq[String], se: Column, minPoints: Int, metricCols: Seq[String],
-                    idCol: String, lonCol: String, latCol: String,
+                    metaCols: Seq[String], idCol: String, lonCol: String, latCol: String,
                     includeChildren: Boolean = false): DataFrame = {
     val lead = key.diff(CellKey).map(col)
-    val metaCols = metaCounts.map(_._1)
 
-    // frequency maps join on the SAME cell key right after the same-key
-    // agg — co-partitioned, no new shuffle pattern
-    val withFreqs = metaCounts
-      .map { case (c, counts) => FrequencyRollup.countsToFreq(counts, c, key) }
-      .foldLeft(cells.filter(col("cnt") >= minPoints))((acc, f) => acc.join(f, key, "left"))
-
-    val clusters = withFreqs
+    val clusters = cells.filter(col("cnt") >= minPoints)
       .select(
         lead ++ Seq(col("min_id").as(idCol),
           (col("slon").cast(DoubleType) / col("cnt")).as(lonCol),
@@ -229,9 +230,8 @@ object GridCluster {
               idCol: String = "id", lonCol: String = "lon", latCol: String = "lat",
               includeChildren: Boolean = false): DataFrame = {
     val (celled, se, _) = cellAssign(points, zoom, bounds, opts, lonCol, latCol)
-    val cells = cellAggregate(celled, CellKey, metricCols, idCol, lonCol, includeChildren)
-    val counts = metaCols.map(c => c -> FrequencyRollup.cellCounts(celled, c, CellKey))
-    finalizeCells(cells, counts, celled, CellKey, lit(se), opts.minPoints, metricCols,
+    val cells = cellAggregate(celled, CellKey, metricCols, idCol, lonCol, metaCols, includeChildren)
+    finalizeCells(cells, celled, CellKey, lit(se), opts.minPoints, metricCols, metaCols,
       idCol, lonCol, latCol, includeChildren)
   }
 }

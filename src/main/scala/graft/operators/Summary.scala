@@ -3,6 +3,7 @@ package graft.operators
 import graft.model.{Bounds, ClusterOptions}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 /** Viewport summary statistics — the reference's `GetMetadata` query
   * (reference: runner/runner.go:278-342 → cluster/helpers.go:142-344
@@ -28,9 +29,13 @@ import org.apache.spark.sql.functions._
   *    "value:ppm" string (integer parts-per-million) rather than a
   *    float-percent JSON map, to be hash-comparable across engines.
   *
-  * Scale: two aggregations (one over cells, one over points) plus the
-  * singles semi-join — all map-side-combined shuffles; the final
-  * cross-join glues 1-row frames. Nothing is collected.
+  * Scale: two aggregations, cross-joined as 1-row frames: one over
+  * cells (reduced to one row; a metric's min, max and sum decompose
+  * over cells, so the exploded-back singles need no second pass over
+  * the points) and one over points (numeric and timestamp metadata, and
+  * every categorical distribution as a one-pass `graft_freq` whose
+  * buffer grows with the distinct values, not the points). Both are
+  * map-side-combined; nothing is collected.
   */
 object Summary {
 
@@ -51,33 +56,34 @@ object Summary {
                       tsMetaCols: Seq[String] = Nil,
                       catMetaCols: Seq[String] = Nil): DataFrame = {
     val (celled, _, _) = GridCluster.cellAssign(points, zoom, bounds, opts)
-    val mp = opts.minPoints
+    val isCluster = col("cnt") >= opts.minPoints
 
+    // Cell aggregate: count, exact decimal metric sums and the members'
+    // raw min/max per cell, reduced to one row. A metric's cluster-level
+    // values are the cell sum of a real cluster and each member's raw
+    // value for an exploded-back single, so min and max decompose over
+    // cells, and a small cell adds its members' decimal sum.
     val cellAgg = celled.groupBy(col("cell_x"), col("cell_y"))
-      .agg(count(lit(1)).as("cnt"),
-        metricCols.map(m => GridCluster.exactSum(col(m)).as(s"sum_$m")): _*)
-
-    val base = cellAgg.agg(
+      .agg(count(lit(1)).as("cnt"), metricCols.flatMap(m => Seq(
+        sum(col(m).cast(DecimalType(18, 2))).as(s"sum_$m"),
+        min(col(m)).as(s"min_$m"), max(col(m)).as(s"max_$m"))): _*)
+    val cellAggs = Seq(
       sum(col("cnt")).as("total_points"),
-      sum(when(col("cnt") >= mp, 1L).otherwise(0L)).as("num_clusters"),
-      sum(when(col("cnt") < mp, col("cnt")).otherwise(0L)).as("num_single_points"))
+      sum(when(isCluster, 1L).otherwise(0L)).as("num_clusters"),
+      sum(when(isCluster, 0L).otherwise(col("cnt"))).as("num_single_points")
+    ) ++ metricCols.flatMap { m =>
+      val clusterSum = col(s"sum_$m").cast(DoubleType)
+      Seq(min(when(isCluster, clusterSum).otherwise(col(s"min_$m"))).as(s"${m}_min"),
+        max(when(isCluster, clusterSum).otherwise(col(s"max_$m"))).as(s"${m}_max"),
+        sum(when(isCluster, clusterSum.cast(DecimalType(18, 2))).otherwise(col(s"sum_$m")))
+          .cast(DoubleType).as(s"${m}_sum"))
+    }
+    val cellStats = cellAgg.agg(cellAggs.head, cellAggs.tail: _*)
 
-    // Cluster-level metric values: the per-cell SUM for real clusters,
-    // each member's raw value for exploded-back singles.
-    val clusterLevel = cellAgg.filter(col("cnt") >= mp)
-      .select(metricCols.map(m => col(s"sum_$m").as(m)): _*)
-      .unionByName(
-        celled.join(cellAgg.filter(col("cnt") < mp).select("cell_x", "cell_y"),
-            Seq("cell_x", "cell_y"), "left_semi")
-          .select(metricCols.map(m => col(m)): _*))
-
-    val metricAggs = metricStats(metricCols)
-    val clusterStats =
-      if (metricAggs.isEmpty) null
-      else clusterLevel.agg(metricAggs.head, metricAggs.tail: _*)
-
-    // Point-level stats: numeric metadata (exactly what the reference's
-    // cluster-count-weighted rollup reconstructs) + timestamp ranges.
+    // Point aggregate: numeric metadata (exactly what the reference's
+    // cluster-count-weighted rollup reconstructs), timestamp ranges and
+    // categorical distributions. Unlike a cluster's `{c}_freq`, every
+    // point weighs 1, so nulls stay in the denominator.
     val withMeta = numericMeta.foldLeft(celled) { case (df, (n, e)) => df.withColumn(n, e) }
     val pointAggs: Seq[Column] =
       numericMeta.flatMap { case (n, _) =>
@@ -86,28 +92,19 @@ object Summary {
       } ++
       tsMetaCols.flatMap { t =>
         Seq(min(col(t)).as(s"${t}_earliest"), max(col(t)).as(s"${t}_latest"))
-      }
-    val pointStats =
-      if (pointAggs.isEmpty) null
-      else withMeta.agg(pointAggs.head, pointAggs.tail: _*)
-
-    // Categorical distributions as canonical sorted value:ppm strings.
-    // Unlike a cluster rollup ([[FrequencyRollup.cellCounts]]), the
-    // counts keep the null value, so nulls stay in the denominator.
-    val catFrames: Seq[DataFrame] = catMetaCols.map { c =>
-      FrequencyRollup.countsToFreq(celled.groupBy(col(c)).agg(count(lit(1)).as("vc")), c, Nil)
-        .select(col(s"${c}_freq").as(s"${c}_dist"))
-    }
-
-    val frames = Seq(Option(base), Option(clusterStats), Option(pointStats)).flatten ++ catFrames
-    val glued = frames.reduce(_ crossJoin _)
+      } ++
+      catMetaCols.map(c =>
+        coalesce(FrequencyRollup.freqString(col(c), lit(1)), lit("")).as(s"${c}_dist"))
+    val glued =
+      if (pointAggs.isEmpty) cellStats
+      else cellStats.crossJoin(withMeta.agg(pointAggs.head, pointAggs.tail: _*))
 
     withMetricAvgs(glued, metricCols)
   }
 
   /** Per-metric statistics over cluster-level rows (cluster sums and
-    * singles' raw values): `{m}_min`, `{m}_max`, exact `{m}_sum`. Shared
-    * with the pyramid's summary, whose rows are cluster-level already.
+    * singles' raw values): `{m}_min`, `{m}_max`, exact `{m}_sum`. Used
+    * by the pyramid's summary, whose rows are cluster-level already.
     */
   def metricStats(metricCols: Seq[String]): Seq[Column] =
     metricCols.flatMap { m =>

@@ -74,19 +74,6 @@ object TilePyramid {
   def densityBand(n: Long): Int =
     if (n > 50000L) 2 else if (n < 5000L) 0 else 1
 
-  /** Per-row cell-size column mirroring [[ClusterOptions.cellSize]]
-    * with a zoom column (n is the driver-side pinned density count).
-    */
-  private def cellSizeCol(zoom: Column, n: Long, opts: ClusterOptions): Column = {
-    val zr = zoom.cast("double") / lit(opts.maxZoom.toDouble)
-    val base = when(zoom < opts.maxZoom / 4, lit(1.1) - lit(0.75) * zr)
-      .when(zoom < opts.maxZoom / 2, lit(0.9) - lit(0.3) * zr)
-      .when(zoom > opts.maxZoom * 3 / 4, lit(0.7) - lit(0.2) * zr)
-      .otherwise(lit(0.75))
-    val m = if (n > 50000L) 1.1 else if (n < 5000L) 0.9 else 1.0
-    lit(opts.radius) * (base * lit(m))
-  }
-
   /** Per-row scale of a zoom column: 2^zoom · extent (exact doubles
     * for zoom ≤ 16).
     */
@@ -99,7 +86,9 @@ object TilePyramid {
   private def celledFor(points: DataFrame, zMin: Int, zMax: Int,
                         opts: ClusterOptions, densityN: Long,
                         lonCol: String, latCol: String): DataFrame = {
-    val cs = cellSizeCol(col("zoom"), densityN, opts)
+    // each zoom's cell size, looked up from the one cell-size rule
+    val cs = element_at(lit((zMin to zMax).map(opts.cellSize(_, densityN)).toArray),
+      col("zoom") - lit(zMin - 1))
     points
       .withColumn("zoom", explode(sequence(lit(zMin), lit(zMax))))
       .withColumn("px", Mercator.projX(col(lonCol), zoomScale(opts)))
@@ -250,10 +239,17 @@ object TilePyramid {
   def finalizePyramid(state: PyramidState, points: DataFrame, zMin: Int, zMax: Int,
                       opts: ClusterOptions = ClusterOptions(),
                       metricCols: Seq[String] = Nil,
-                      idCol: String = "id", lonCol: String = "lon", latCol: String = "lat"): DataFrame =
-    GridCluster.finalizeCells(state.cells, state.metaCounts,
+                      idCol: String = "id", lonCol: String = "lon", latCol: String = "lat"): DataFrame = {
+    // frequency strings join on the SAME cell key right after the
+    // same-key agg — co-partitioned, no new shuffle pattern
+    val cells = state.metaCounts.foldLeft(state.cells) { case (acc, (c, counts)) =>
+      acc.join(FrequencyRollup.countsToFreq(counts, c, pyramidKey), pyramidKey, "left")
+    }
+    GridCluster.finalizeCells(cells,
       celledFor(points, zMin, zMax, opts, state.densityN, lonCol, latCol),
-      pyramidKey, zoomScale(opts), opts.minPoints, metricCols, idCol, lonCol, latCol)
+      pyramidKey, zoomScale(opts), opts.minPoints, metricCols, state.metaCounts.map(_._1),
+      idCol, lonCol, latCol)
+  }
 
   /** @param metaCols metadata columns rolled into per-cluster
     *                  "value:ppm" frequency strings, as

@@ -1,11 +1,16 @@
 package graft.plans
 
+import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream}
+import java.math.{BigDecimal => JBigDecimal, RoundingMode}
+import java.nio.charset.StandardCharsets.US_ASCII
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
+import org.apache.spark.sql.catalyst.expressions.aggregate.{DeclarativeAggregate, TypedImperativeAggregate}
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Cast, Concat, Expression, Greatest, If, IsNull, Least, LessThanOrEqual, Literal, Or, RaiseError}
-import org.apache.spark.sql.catalyst.trees.UnaryLike
+import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
 import org.apache.spark.sql.catalyst.util.TypeUtils
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Second-smallest value of a group in ONE aggregation pass
   * (`graft_min2`) — a [[DeclarativeAggregate]], so it partial-
@@ -154,4 +159,131 @@ case class TopKPosSum(child: Expression, k: Int)
 
   override protected def withNewChildInternal(newChild: Expression): TopKPosSum =
     copy(child = newChild)
+}
+
+/** Weighted value counts of one group: value → count, plus the total
+  * weight (null values add to the total but hold no entry). The
+  * buffer of [[FreqString]].
+  */
+final class FreqCounts {
+  val counts = new java.util.HashMap[UTF8String, Array[Long]]()
+  var total = 0L
+
+  def add(v: UTF8String, w: Long): Unit = {
+    total += w
+    if (v != null) {
+      val c = counts.get(v)
+      // the input row's bytes are reused: store a copy of a new key
+      if (c == null) counts.put(v.clone(), Array(w)) else c(0) += w
+    }
+  }
+}
+
+/** The canonical sorted "value:ppm" frequency string of a group in ONE
+  * aggregation pass (`graft_freq(value, weight)`) — the encoder of every
+  * cluster `{c}_freq`, pyramid `{c}_freq` and summary `{c}_dist`.
+  *
+  * Contract (`FreqStringSpec` pins it, byte for byte, against a builtin
+  * window-and-regroup reference):
+  *  - `value` must be a STRING; `weight` an integral count;
+  *  - a row with a null weight is skipped;
+  *  - a null value adds its weight to the total but emits no entry;
+  *  - the result is null when the total is 0;
+  *  - entries `value:ppm`, comma-joined, in `UTF8String` byte order
+  *    (`array_sort`'s order for strings);
+  *  - ppm = Spark's `round` of `count * 1e6 / total` (HALF_UP on the
+  *    `BigDecimal` of the double), as a long.
+  *
+  * A [[TypedImperativeAggregate]]: the buffer is a value → count hash
+  * map, so memory is bounded by the group's distinct values, not its
+  * members; partial buffers serialize for the exchange and for the
+  * object-hash aggregate's sort-based fallback.
+  */
+case class FreqString(value: Expression, weight: Expression,
+                      mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
+    extends TypedImperativeAggregate[FreqCounts] with BinaryLike[Expression] {
+
+  override def prettyName: String = "graft_freq"
+  override def left: Expression = value
+  override def right: Expression = weight
+  override def nullable: Boolean = true
+  override def dataType: DataType = StringType
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    (value.dataType, weight.dataType) match {
+      case (StringType, ByteType | ShortType | IntegerType | LongType) =>
+        TypeCheckResult.TypeCheckSuccess
+      case (v, w) => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName(value, weight) encodes STRING values as sorted value:ppm entries " +
+          s"weighted by an integral count; got value ${v.simpleString}, weight ${w.simpleString}")
+    }
+
+  override def createAggregationBuffer(): FreqCounts = new FreqCounts
+
+  override def update(buf: FreqCounts, input: InternalRow): FreqCounts = {
+    val w = weight.eval(input)
+    if (w != null) buf.add(value.eval(input).asInstanceOf[UTF8String], w.asInstanceOf[Number].longValue)
+    buf
+  }
+
+  override def merge(buf: FreqCounts, other: FreqCounts): FreqCounts = {
+    buf.total += other.total
+    other.counts.forEach { (v, c) =>
+      val mine = buf.counts.get(v)
+      if (mine == null) buf.counts.put(v, Array(c(0))) else mine(0) += c(0)
+    }
+    buf
+  }
+
+  override def eval(buf: FreqCounts): Any =
+    if (buf.total == 0L) null
+    else {
+      val values = buf.counts.keySet.toArray(new Array[UTF8String](0))
+      java.util.Arrays.sort(values, (a: UTF8String, b: UTF8String) => a.binaryCompare(b))
+      val out = new ByteArrayOutputStream()
+      values.zipWithIndex.foreach { case (v, i) =>
+        if (i > 0) out.write(',')
+        out.write(v.getBytes)
+        out.write(':')
+        val share = buf.counts.get(v)(0).toDouble * 1000000.0 / buf.total.toDouble
+        out.write(JBigDecimal.valueOf(share).setScale(0, RoundingMode.HALF_UP)
+          .longValue.toString.getBytes(US_ASCII))
+      }
+      UTF8String.fromBytes(out.toByteArray)
+    }
+
+  override def serialize(buf: FreqCounts): Array[Byte] = {
+    val bytes = new ByteArrayOutputStream()
+    val out = new DataOutputStream(bytes)
+    out.writeLong(buf.total)
+    out.writeInt(buf.counts.size)
+    buf.counts.forEach { (v, c) =>
+      out.writeInt(v.numBytes)
+      out.write(v.getBytes)
+      out.writeLong(c(0))
+    }
+    out.flush()
+    bytes.toByteArray
+  }
+
+  override def deserialize(stored: Array[Byte]): FreqCounts = {
+    val in = new DataInputStream(new java.io.ByteArrayInputStream(stored))
+    val buf = new FreqCounts
+    buf.total = in.readLong()
+    for (_ <- 0 until in.readInt()) {
+      val v = new Array[Byte](in.readInt())
+      in.readFully(v)
+      buf.counts.put(UTF8String.fromBytes(v), Array(in.readLong()))
+    }
+    buf
+  }
+
+  override def withNewMutableAggBufferOffset(offset: Int): FreqString =
+    copy(mutableAggBufferOffset = offset)
+
+  override def withNewInputAggBufferOffset(offset: Int): FreqString =
+    copy(inputAggBufferOffset = offset)
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): FreqString =
+    copy(value = newLeft, weight = newRight)
 }

@@ -70,6 +70,7 @@ object TextExpressions {
     // registry in an AggregateExpression during resolution
     "graft_min2" -> (es => MinTwo(es(0))),
     "graft_topksum" -> (es => TopKPosSum(es(0), intLit(es(1)))),
+    "graft_freq" -> (es => FreqString(es(0), es(1))),
     "graft_bigrams" -> (es => BigramPairs(es(0))))
 
   private def intLit(e: Expression): Int = e.eval(null) match {

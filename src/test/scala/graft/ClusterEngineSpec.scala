@@ -1,7 +1,10 @@
 package graft
 
 import graft.model.Bounds
+import graft.operators.{GridCluster, Summary}
+import graft.sources.PointGen
 import java.nio.file.Files
+import org.apache.spark.sql.functions.{col, sum, when}
 
 /** End-to-end service surface: create → list → query → summary →
   * GeoJSON, mirroring the reference's RPC flow (runner/runner.go).
@@ -43,6 +46,24 @@ class ClusterEngineSpec extends SparkSpec {
     val (mn, mx, av) = (s.getAs[Double]("meta_elevation_min"),
       s.getAs[Double]("meta_elevation_max"), s.getAs[Double]("meta_elevation_avg"))
     assert(mn >= 0.0 && mx <= 5000.0 && mn <= av && av <= mx)
+  }
+
+  test("summary metric stats equal those over the clustered rows, with clusters and singles mixed") {
+    val metrics = Seq("metric_value", "metric_sales")
+    val points = PointGen.uniformPoints(spark, 3000, Bounds.World, 11L)
+    val (zoom, bounds) = (4, Bounds(-120.0, -60.0, 150.0, 70.0))
+    val s = Summary.viewportSummary(points, zoom, bounds, metricCols = metrics).head()
+    // the cluster-level rows: each cluster's sum, each single's raw value
+    val rows = GridCluster.cluster(points, zoom, bounds, metricCols = metrics)
+    val counts = Seq(sum(when(col("is_cluster"), 1L).otherwise(0L)).as("num_clusters"),
+      sum(when(col("is_cluster"), 0L).otherwise(1L)).as("num_single_points"))
+    val ref = Summary.withMetricAvgs(
+      rows.agg(counts.head, counts.tail ++ Summary.metricStats(metrics): _*), metrics).head()
+    assert(s.getAs[Long]("num_clusters") > 0L && s.getAs[Long]("num_single_points") > 0L)
+    for (c <- Seq("num_clusters", "num_single_points"))
+      assert(s.getAs[Long](c) == ref.getAs[Long](c), c)
+    for (m <- metrics; st <- Seq("min", "max", "sum", "avg"))
+      assert(s.getAs[Double](s"${m}_$st") == ref.getAs[Double](s"${m}_$st"), s"${m}_$st")
   }
 
   test("frequency rollups emit canonical ppm strings") {

@@ -65,4 +65,19 @@ class FrequencyRollupSpec extends SparkSpec {
     val freq = GridCluster.cluster(df, 0, Bounds.World, opts, metaCols = Seq("type")).collect()
     assert(freq.length == 1 && freq.head.getAs[String]("type_freq") == "park:333333,store:666667")
   }
+
+  test("an empty viewport's _dist is the empty string; a cluster whose members all lack the key has a null _freq") {
+    val df = Seq(
+      (1L, -74.006, 40.7128, null.asInstanceOf[String]),
+      (2L, -74.007, 40.7129, null.asInstanceOf[String]),
+      (3L, 2.35, 48.85, "park")
+    ).toDF("id", "lon", "lat", "type")
+    val empty = Summary.viewportSummary(df, 3, Bounds(100.0, -10.0, 120.0, 10.0), opts,
+      catMetaCols = Seq("type")).head()
+    assert(empty.getAs[String]("type_dist") == "")
+    val out = GridCluster.cluster(df, 3, Bounds.World, opts, metaCols = Seq("type"))
+      .filter("is_cluster").collect()
+    assert(out.length == 1 && out.head.getAs[Long]("count") == 2L &&
+      out.head.getAs[String]("type_freq") == null)
+  }
 }

@@ -117,22 +117,26 @@ class GridClusterSpec extends SparkSpec {
   test("each pyramid zoom slice equals the live query over the world, row for row") {
     // the pyramid is a materialized view of the live query: both run the
     // one cell aggregate and finalize, so ids, counts, centroids, metric
-    // sums and _freq strings agree exactly
-    val df = sources.PointGen.uniformPoints(spark, 3000, Bounds.World, seed = 7L)
+    // sums and _freq strings agree exactly. Zooms 0-16 cross every
+    // cell-size breakpoint, in two density bands (n < 5,000 and
+    // 5,000 <= n <= 50,000)
     val metrics = Seq("metric_value")
     val meta = Seq("meta_category")
-    val pyramid = TilePyramid.build(df, 0, 3, opts, metrics, meta).cache()
     def rows(d: org.apache.spark.sql.DataFrame) = d.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
-    var kinds = Set.empty[Boolean]
-    for (z <- 0 to 3) {
-      val live = GridCluster.cluster(df, z, Bounds.World, opts, metrics, meta)
-      val slice = pyramid.filter(col("zoom") === z).drop("zoom")
-      assert(slice.columns.sameElements(live.columns))
-      val (l, p) = (rows(live), rows(slice))
-      assert(l.nonEmpty && l == p, s"zoom $z: live and pyramid rows differ")
-      kinds ++= l.map(_(4).asInstanceOf[Boolean])
+    for (n <- Seq(3000L, 6000L)) {
+      val df = sources.PointGen.uniformPoints(spark, n, Bounds.World, seed = 7L)
+      val pyramid = TilePyramid.build(df, 0, 16, opts, metrics, meta).cache()
+      var kinds = Set.empty[Boolean]
+      for (z <- 0 to 16) {
+        val live = GridCluster.cluster(df, z, Bounds.World, opts, metrics, meta)
+        val slice = pyramid.filter(col("zoom") === z).drop("zoom")
+        assert(slice.columns.sameElements(live.columns))
+        val (l, p) = (rows(live), rows(slice))
+        assert(l.nonEmpty && l == p, s"n $n zoom $z: live and pyramid rows differ")
+        kinds ++= l.map(_(4).asInstanceOf[Boolean])
+      }
+      assert(kinds == Set(true, false), "fixture must yield both clusters and singles")
+      pyramid.unpersist()
     }
-    assert(kinds == Set(true, false), "fixture must yield both clusters and singles")
-    pyramid.unpersist()
   }
 }
