@@ -14,13 +14,13 @@ import org.apache.spark.storage.StorageLevel
   * one class over the relational operators — a user of the reference
   * switches by calling these five methods.
   *
-  * | reference RPC          | here                      |
-  * |------------------------|---------------------------|
-  * | CreateCluster(n)       | [[createDataset]]         |
-  * | LoadCluster(id)        | [[load]] (LRU-cached)     |
-  * | ListClusters()         | [[list]]                  |
-  * | GetClusters(id,z,b)    | [[getClusters]]           |
-  * | GetMetadata(id,z,b)    | [[getSummary]]            |
+  * | reference RPC          | here                       |
+  * |------------------------|----------------------------|
+  * | CreateCluster(n)       | [[createDataset]]          |
+  * | LoadCluster(id)        | [[load]] (LRU-held handle) |
+  * | ListClusters()         | [[list]]                   |
+  * | GetClusters(id,z,b)    | [[getClusters]]            |
+  * | GetMetadata(id,z,b)    | [[getSummary]]             |
   *
   * Options default to the reference's service path (MinPoints=2,
   * Radius=100 — runner/runner.go:42-50).
@@ -35,7 +35,7 @@ final class ClusterEngine(val spark: SparkSession, warehouseDir: String,
   def createDataset(id: String, numPoints: Long, seed: Long = 42L): Catalog#SavedInfo =
     catalog.save(PointGen.uniformPoints(spark, numPoints, Bounds.World, seed), id)
 
-  /** Q4: load (cached behind the LRU). */
+  /** Q4: load (an LRU-held handle, no cached data). */
   def load(id: String): DataFrame = catalog.load(id)
 
   /** Q5 / catalog. */

@@ -27,9 +27,9 @@ import org.apache.spark.sql.functions._
   *     the parquet scan.
   *  3. `catalog-serving`: catalog save → load → count, kill an
   *     executor, re-run the load+count — EXPECTED to return the
-  *     identical count (cached blocks on the dead executor recompute
-  *     from the persisted dataset; the Catalog's drain/reap logic must
-  *     not wedge on the lost frames).
+  *     identical count (the Catalog's held handle caches no blocks, so
+  *     the re-run rescans the persisted dataset and must not wedge on
+  *     the lost executor).
   *
   * Usage (SPARK_HOME must point at a full Spark dist so the worker can
   * spawn executor JVMs; SPARK_SCALA_VERSION because a bare-jars dist

@@ -197,10 +197,6 @@ object SparkEntry {
     distinct.head
   }
 
-  /** Back-compat boolean view of [[tsLayout]]. */
-  private[graft] def tsStoredAsNanos(s: SparkSession, path: String): Boolean =
-    tsLayout(s, path) == TsLayout.NanosLong
-
   /** Scala double literal → SQL literal with round-trip precision. */
   private def d(x: Double): String = {
     val r = java.lang.Double.toString(x)

@@ -49,25 +49,15 @@ object TrainingPrep {
         (col("cum_before") % budget).as("bin_offset"))
   }
 
-  /** Keep-decision for deterministic hash sampling at `rate`: the first
-    * 6 hex chars of md5(id) are uniform on [0, 16^6); comparing them
-    * lexicographically against the 6-hex-digit threshold
-    * round(rate·16^6) keeps exactly that fraction, identically in any
-    * engine with a bit-exact md5. Stateless and per-row: no shuffle,
-    * stable under reruns, appends, and repartitioning.
-    */
-  /** The uniform 6-hex-char sampling key of an id — the single
-    * definition both [[hashKeep]] and [[sampleStrata]] compare against
-    * [[hexThreshold]] constants (and that oracle SQL mirrors).
+  /** The uniform 6-hex-char sampling key of an id, which
+    * [[sampleStrata]] compares against [[hexThreshold]] constants (and
+    * that oracle SQL mirrors).
     */
   private def hexPrefix(id: Column): Column =
     substring(md5(id.cast("string")), 1, 6)
 
-  def hashKeep(id: Column, rate: Double): Column =
-    hexPrefix(id) < lit(hexThreshold(rate))
-
-  /** Hex threshold literal for [[hashKeep]] — exposed so oracle SQL can
-    * embed the identical constant. rate=1.0 maps to "g", which is
+  /** Hex threshold literal for [[sampleStrata]] — exposed so oracle SQL
+    * can embed the identical constant. rate=1.0 maps to "g", which is
     * lexicographically above every hex digit (the naive "1000000" is 7
     * chars and would compare GREATER than most 6-char prefixes,
     * silently keeping only ~1/16 of rows).
@@ -201,10 +191,10 @@ object TrainingPrep {
 
   /** md5-derived uniform integer on [0, 16^6) for an id — the sampling
     * key [[temperatureMix]] compares against DATA-DEPENDENT thresholds
-    * (unlike [[hashKeep]]'s compile-time constants, which compare the
-    * hex prefix as a string). hex→int goes through
-    * position-in-alphabet (instr), the one conversion both engines
-    * spell identically; [[hex6IntSql]] is its oracle twin.
+    * (unlike [[sampleStrata]]'s compile-time [[hexThreshold]]
+    * constants, which compare the hex prefix as a string). hex→int goes
+    * through position-in-alphabet (instr), the one conversion both
+    * engines spell identically; [[hex6IntSql]] is its oracle twin.
     */
   private[graft] def hex6Int(id: Column): Column = {
     val h = md5(id.cast("string"))

@@ -1623,7 +1623,7 @@ object PipelineQueries {
 
   /** Deterministic stratified sampling — a training-mixture recipe
     * (50% en, 20% everything else) decided by an md5 hex-prefix
-    * threshold ([[graft.operators.TrainingPrep.hashKeep]]): md5 is
+    * threshold ([[graft.operators.TrainingPrep.hexThreshold]]): md5 is
     * bit-identical across engines and the prefix comparison is plain
     * string order, so the keep set is hash-exact.
     */

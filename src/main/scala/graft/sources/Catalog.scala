@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import java.nio.file.{Files, Paths}
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Dataset catalog + persistence — the reference's storage/catalog
   * surface (S4–S7, Q3–Q5):
@@ -16,50 +17,25 @@ import scala.collection.mutable
   *  - catalog = one `_graft_meta.json` per dataset + directory listing
   *    (reference: `cluster-{n}p-{ts}-{id}.zst` filename encoding,
   *    cluster/helpers.go:54-97);
-  *  - load = cached DataFrame behind an LRU of `maxCached` datasets with
-  *    unpersist-on-evict (reference: runner/runner.go:113-140,157-203,
-  *    maxClusters=5). Two invalidation disciplines, deliberately split:
-  *    - **Pure eviction (LRU overflow / idle) DRAINS**: an immediate
-  *      `unpersist()` of a frame another thread's request is mid-action
-  *      on fails that request with BlockNotFoundException (found by
-  *      ServingSoakSpec's 32-thread storm — fatal under local mode's
-  *      task.maxFailures=1; a recompute-retry hiccup on a real
-  *      cluster). Evicted frames unpersist only after `drainGraceMs`
-  *      out of the LRU. The data did NOT change, so the entry lingering
-  *      in Spark's CacheManager is harmless — a re-load reusing it is
-  *      correct. Memory stays bounded: one grace window of evictions,
-  *      reaped on every [[load]] (not just on the next eviction), so
-  *      the bound holds even when eviction traffic stops.
-  *    - **Data mutation (save / append / delete / compact) unpersists
-  *      IMMEDIATELY — the live LRU entry AND any same-id draining
-  *      frame** ([[invalidate]]): a drained entry would linger in the
-  *      CacheManager and a fresh identical-plan read would silently
-  *      reuse STALE pre-mutation blocks (caught by
-  *      CompactionPolicySpec / PyramidDeleteSpec when r13 first
-  *      drained these sites too; the draining-side purge closes the
-  *      same hole for frames evicted shortly before the mutation).
-  *      Consistency beats availability at mutation points; a request
-  *      racing a delete may fail and retry, by design.
+  *  - load = a held handle (below) behind an LRU of `maxCached`
+  *    datasets (reference: runner/runner.go:113-140,157-203,
+  *    maxClusters=5, which holds whole KD-trees in memory; here the data
+  *    stays in the tile-partitioned files).
   *
-  * Pyramid reads ([[loadPyramid]]) follow a third, simpler rule: one
-  * resolved pyramid relation per dataset — schema and file listing, no
-  * cached data, so nothing to unpersist — is held and filtered by every
-  * pyramid reader, instead of a `spark.read.parquet` (directory listing
-  * plus a schema-inference job) per request. The handle is DROPPED
-  * whenever the files under it may change: before and after every
-  * [[savePyramid]], after a re-[[save]], and in [[invalidate]] (append,
-  * delete, compaction). A per-id generation counter, bumped on every
+  * One rule for datasets ([[load]]) and pyramids ([[loadPyramid]]): a
+  * handle is a resolved relation — schema and file listing, no cached
+  * data, so nothing to unpersist — held so that a read costs neither a
+  * directory listing nor a schema-inference job, and DROPPED whenever
+  * the files under it may change: [[save]], [[append]], [[deletePoints]]
+  * and [[compactPoints]] drop both, and [[savePyramid]] drops the
+  * pyramid handle before and after its write. Dataset handles resolve
+  * inside the monitor and are bounded by the LRU. Pyramid handles
+  * resolve outside it, so a per-id generation counter, bumped on every
   * drop, makes sure a handle resolved while a rewrite was in flight is
   * returned to its caller but never kept. A dataset with no pyramid
-  * keeps no handle ([[Catalog.NoPyramidException]]), so a later build
-  * is served. Like the LRU, the handle sees only rewrites made through
-  * this catalog: a pyramid rewritten by another process is not
-  * re-listed here.
-  *
-  * Scale notes: MEMORY_AND_DISK (not MEMORY_ONLY) so a 100 TB dataset
-  * degrades to disk-backed partitions instead of OOM; tile partitioning
-  * bounds each file's spatial extent so viewport queries touch only
-  * intersecting tiles.
+  * keeps no pyramid handle ([[Catalog.NoPyramidException]]), so a later
+  * build is served. Handles see only rewrites made through this
+  * catalog: files rewritten by another process are not re-listed here.
   */
 object Catalog {
   private val Se5 = math.pow(2.0, 5) * 512.0
@@ -80,26 +56,23 @@ object Catalog {
     for (ty <- tyMin to tyMax; tx <- txMin to txMax) yield ty * 32 + tx
   }
 
+  // a flat meta file's `"key":value` pairs, and the elements of a value
+  private val MetaField = """"(\w+)":(\[[^\]]*\]|"[^"]*"|[^,}]*)""".r
+  private val MetaItem = """"([^"]*)"|([^\[\],"]+)""".r
+
   /** A pyramid read on a dataset that has no persisted pyramid. */
   final class NoPyramidException(val id: String)
     extends NoSuchElementException(s"dataset $id has no pyramid")
 }
 
-final class Catalog(spark: SparkSession, warehouseDir: String, maxCached: Int = 5,
-                    idleEvictMs: Long = 30L * 60 * 1000,
-                    drainGraceMs: Long = 2L * 60 * 1000) {
+final class Catalog(spark: SparkSession, warehouseDir: String, maxCached: Int = 5) {
 
   final case class SavedInfo(id: String, numPoints: Long, createdAtMs: Long, path: String,
                              fileSizeBytes: Long = 0L)
 
+  // held dataset and pyramid handles, and the pyramid drop counters (the
+  // class doc's handle rule)
   private val lru = mutable.LinkedHashMap.empty[String, DataFrame]
-  private val lastAccessMs = mutable.HashMap.empty[String, Long]
-  // evicted-but-possibly-still-serving frames awaiting their deferred
-  // unpersist, keyed by dataset id so mutations can purge them (see the
-  // class doc's eviction-drain contract)
-  private val draining = mutable.ArrayBuffer.empty[(String, DataFrame, Long)]
-  // held pyramid relations and their drop counters (the class doc's
-  // pyramid-handle rule)
   private val pyramids = mutable.HashMap.empty[String, DataFrame]
   private val pyramidGen = mutable.HashMap.empty[String, Long].withDefaultValue(0L)
 
@@ -111,52 +84,43 @@ final class Catalog(spark: SparkSession, warehouseDir: String, maxCached: Int = 
     pyramidGen(id) += 1
   }
 
-  /** Move an evicted frame to the draining list and unpersist anything
-    * whose grace window has lapsed. Callers hold the monitor.
-    */
-  private def retire(id: String, df: DataFrame, now: Long): Unit = {
-    draining += ((id, df, now))
-    sweepDraining(now)
-  }
-
-  /** Unpersist draining frames whose grace window has lapsed. Called
-    * from [[retire]] AND from every [[load]] — so a drained frame is
-    * reaped within one grace window of any subsequent access, not only
-    * when a LATER eviction happens to fire (without the load-side
-    * sweep, the last grace-window of evictions outlived its deadline
-    * indefinitely once eviction traffic stopped). Callers hold the
-    * monitor.
-    */
-  private def sweepDraining(now: Long): Unit =
-    draining.filterInPlace { case (_, d, at) =>
-      val keep = now - at <= drainGraceMs
-      if (!keep) d.unpersist()
-      keep
-    }
-
-  /** Mutation-site invalidation: unpersist the live LRU entry AND any
-    * same-id frame still draining, immediately. A drained frame stays
-    * registered in Spark's CacheManager, and cached-plan matching is
-    * path-based — so after a save/append/delete/compact, a lingering
-    * pre-mutation frame would be silently REUSED by the next
-    * identical-plan read (stale data / missed appended files). The
-    * eviction-drain grace applies only to frames whose data did not
-    * change; mutations must purge without grace.
-    */
+  /** Drop both held handles of a dataset whose files changed. */
   private def invalidate(id: String): Unit = synchronized {
     dropPyramid(id)
-    lru.remove(id).foreach(_.unpersist())
-    lastAccessMs.remove(id)
-    draining.filterInPlace { case (dId, d, _) =>
-      val keep = dId != id
-      if (!keep) d.unpersist()
-      keep
-    }
+    lru.remove(id)
   }
 
   private def dsPath(id: String) = s"$warehouseDir/$id"
   private def pyramidPath(id: String) = s"${dsPath(id)}/_pyramid"
   private def tombPath(id: String) = s"${dsPath(id)}/_tombstones"
+  private def stateMetaPath(id: String) = Paths.get(dsPath(id), "_pyramid_state_meta.json")
+
+  /** The rows of a sidecar directory (`_pyramid`, `_tombstones`), read
+    * through its entries: Spark treats an underscore-named directory it
+    * is handed as a hidden path and logs `All paths were ignored` for
+    * it. `basePath` keeps the partition column (`zoom`) of child
+    * directories. None when the directory is absent or holds no data.
+    */
+  private def readSidecar(dir: String): Option[DataFrame] = {
+    val root = Paths.get(dir)
+    if (!Files.isDirectory(root)) return None
+    val s = Files.list(root)
+    val entries = try s.iterator().asScala.map(_.getFileName.toString)
+      .filterNot(n => n.startsWith("_") || n.startsWith(".")).map(n => s"$dir/$n").toVector
+    finally s.close()
+    if (entries.isEmpty) None
+    else Some(spark.read.option("basePath", dir).parquet(entries: _*))
+  }
+
+  /** The fields of a flat meta file (`_graft_meta.json`,
+    * `_pyramid_state_meta.json`): a string or number as its one
+    * element, a string array as its elements.
+    */
+  private def readMeta(path: java.nio.file.Path): Map[String, Seq[String]] =
+    Catalog.MetaField.findAllMatchIn(Files.readString(path)).map { f =>
+      f.group(1) -> Catalog.MetaItem.findAllMatchIn(f.group(2))
+        .map(i => Option(i.group(1)).getOrElse(i.group(2))).toSeq
+    }.toMap
 
   /** The catalog entry of a dataset that must exist. */
   private def savedInfo(id: String): SavedInfo =
@@ -199,8 +163,8 @@ final class Catalog(spark: SparkSession, warehouseDir: String, maxCached: Int = 
   def save(points: DataFrame, id: String): SavedInfo = {
     val path = dsPath(id)
     // a re-save is a NEW dataset: stale tombstones from a previous
-    // incarnation must not haunt recycled ids, and a cached handle
-    // pins the old file listing
+    // incarnation must not haunt recycled ids, and a held handle pins
+    // the old file listing
     val tomb = new java.io.File(tombPath(id))
     if (tomb.exists) StagedSwap.rmRf(tomb)
     invalidate(id)
@@ -221,8 +185,8 @@ final class Catalog(spark: SparkSession, warehouseDir: String, maxCached: Int = 
   }
 
   /** Append an ingest batch to an existing dataset (same tile
-    * partitioning and compression; parquet append). The cached handle
-    * is invalidated — a cached plan pins its file listing and would
+    * partitioning and compression; parquet append). The held handles
+    * are dropped — a resolved relation pins its file listing and would
     * silently miss the new files. Meta counts accumulate.
     */
   def append(points: DataFrame, id: String): SavedInfo = {
@@ -278,24 +242,11 @@ final class Catalog(spark: SparkSession, warehouseDir: String, maxCached: Int = 
   def loadPyramid(id: String): DataFrame = {
     val (held, gen) = synchronized((pyramids.get(id), pyramidGen(id)))
     held.getOrElse {
-      val path = pyramidPath(id)
-      if (!Files.isDirectory(Paths.get(path))) throw new Catalog.NoPyramidException(id)
-      val df = spark.read.parquet(path)
+      val df = readSidecar(pyramidPath(id)).getOrElse(throw new Catalog.NoPyramidException(id))
       synchronized { if (pyramidGen(id) == gen) pyramids.put(id, df) }
       df
     }
   }
-
-  /** Persist the mergeable pyramid partial state
-    * ([[graft.operators.PyramidState]]) so ingest batches can maintain
-    * the pyramid incrementally across processes. Decimal accumulator
-    * columns round-trip parquet exactly. Underscore prefix keeps the
-    * state invisible to the main dataset scan.
-    */
-  private def stateMetaPath(id: String) = Paths.get(dsPath(id), "_pyramid_state_meta.json")
-
-  private def stateMetaField(j: String, k: String): Long =
-    s""""$k":(-?\\d+)""".r.findFirstMatchIn(j).get.group(1).toLong
 
   /** Persist the mergeable pyramid partial state
     * ([[graft.operators.PyramidState]]) so ingest batches can maintain
@@ -308,7 +259,7 @@ final class Catalog(spark: SparkSession, warehouseDir: String, maxCached: Int = 
   def savePyramidState(id: String, st: graft.operators.PyramidState,
                        zMin: Int, zMax: Int, metricCols: Seq[String]): Unit = {
     val cur = if (Files.isRegularFile(stateMetaPath(id)))
-      stateMetaField(Files.readString(stateMetaPath(id)), "version") else 0L
+      readMeta(stateMetaPath(id))("version").head.toLong else 0L
     val v = cur + 1
     val base = s"${dsPath(id)}/_pyramid_state/v$v"
     st.cells.write.mode("overwrite").option("compression", "zstd").parquet(s"$base/cells")
@@ -333,59 +284,37 @@ final class Catalog(spark: SparkSession, warehouseDir: String, maxCached: Int = 
   /** Load a persisted pyramid state: (state, zMin, zMax, metricCols). */
   def loadPyramidState(id: String): Option[(graft.operators.PyramidState, Int, Int, Seq[String])] = {
     if (!Files.isRegularFile(stateMetaPath(id))) return None
-    val j = Files.readString(stateMetaPath(id))
-    def num(k: String): Long = stateMetaField(j, k)
-    def strs(k: String): Seq[String] =
-      s""""$k":\\[([^\\]]*)\\]""".r.findFirstMatchIn(j).get.group(1)
-        .split(",").toSeq.map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty)
+    val m = readMeta(stateMetaPath(id))
+    def num(k: String): Long = m(k).head.toLong
     val base = s"${dsPath(id)}/_pyramid_state/v${num("version")}"
     val cells = spark.read.parquet(s"$base/cells")
-    val metaCounts = strs("metaCols").map(c => c -> spark.read.parquet(s"$base/meta_$c"))
+    val metaCounts = m("metaCols").map(c => c -> spark.read.parquet(s"$base/meta_$c"))
     Some((graft.operators.PyramidState(cells, metaCounts, num("densityN")),
-      num("zMin").toInt, num("zMax").toInt, strs("metricCols")))
+      num("zMin").toInt, num("zMax").toInt, m("metricCols")))
   }
 
-  /** S5/Q4: load (cached, LRU-admitted). Entries idle past `idleEvictMs`
-    * are evicted on the next access — the reference runs a 30-minute
-    * background ticker (runner/runner.go:113-140); consulting the
-    * idle clock at access time gives the same bound without a thread.
+  /** S5/Q4: the dataset's held handle (see the class doc). A miss
+    * resolves inside the monitor; admitting it evicts the
+    * least-recently-used id beyond `maxCached`.
     */
   def load(id: String): DataFrame = synchronized {
-    val now = System.currentTimeMillis()
-    sweepDraining(now)
-    lastAccessMs.filterInPlace { (cachedId, at) =>
-      val keep = cachedId == id || now - at <= idleEvictMs
-      if (!keep) lru.remove(cachedId).foreach(retire(cachedId, _, now))
-      keep
+    val df = lru.remove(id).getOrElse {
+      val raw = spark.read.parquet(dsPath(id))
+      // tombstoned points ([[deletePoints]]) leave every serving
+      // answer immediately; the anti-join rides the broadcast-small
+      // tombstone set and disappears entirely once [[compactPoints]]
+      // drops the rows physically. No `distinct`: an anti-join ignores
+      // duplicate keys, and every read of the handle would pay its
+      // shuffle
+      readSidecar(tombPath(id)).fold(raw)(t =>
+        raw.join(broadcast(t), Seq("id"), "left_anti"))
     }
-    lastAccessMs.put(id, now)
-    lru.remove(id) match {
-      case Some(df) =>
-        lru.put(id, df) // refresh recency
-        df
-      case None =>
-        val raw = spark.read.parquet(dsPath(id))
-        // tombstoned points ([[deletePoints]]) leave every serving
-        // answer immediately; the anti-join rides the broadcast-small
-        // tombstone set and disappears entirely once [[compactPoints]]
-        // drops the rows physically
-        val tomb = tombPath(id)
-        val visible = if (new java.io.File(tomb).exists)
-          raw.join(broadcast(spark.read.parquet(tomb).distinct()), Seq("id"), "left_anti")
-        else raw
-        val df = visible.persist(StorageLevel.MEMORY_AND_DISK)
-        lru.put(id, df)
-        if (lru.size > maxCached) {
-          val (evictId, evictDf) = lru.head
-          lru.remove(evictId)
-          lastAccessMs.remove(evictId)
-          retire(evictId, evictDf, now)
-        }
-        df
-    }
+    lru.put(id, df) // most recent last
+    if (lru.size > maxCached) lru.remove(lru.head._1)
+    df
   }
 
-  /** Currently cached dataset ids, least-recent first (test hook). */
+  /** Dataset ids with a held handle, least-recent first (test hook). */
   def cachedIds: Seq[String] = synchronized(lru.keys.toSeq)
 
   /** Highest id ever issued for a dataset — live rows OR tombstoned
@@ -396,11 +325,9 @@ final class Catalog(spark: SparkSession, warehouseDir: String, maxCached: Int = 
   def maxIssuedId(id: String): Long = {
     val liveMax = Option(load(id).agg(max(col("id"))).head().get(0))
       .map(_.asInstanceOf[Long]).getOrElse(0L)
-    val tomb = tombPath(id)
-    val tombMax = if (new java.io.File(tomb).exists)
-      Option(spark.read.parquet(tomb).agg(max(col("id"))).head().get(0))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
-    else 0L
+    val tombMax = readSidecar(tombPath(id))
+      .flatMap(t => Option(t.agg(max(col("id"))).head().get(0)))
+      .map(_.asInstanceOf[Long]).getOrElse(0L)
     math.max(liveMax, tombMax)
   }
 
@@ -408,7 +335,7 @@ final class Catalog(spark: SparkSession, warehouseDir: String, maxCached: Int = 
     * lifecycle (save / append / load+serve / delete), the same side-
     * table contract as the vector/text/dedup indexes: an O(|batch|)
     * parquet append, never a rewrite. [[load]] anti-joins the set out
-    * of every subsequent read (the handle cache is invalidated here);
+    * of every subsequent read (the held handles are dropped here);
     * [[compactPoints]] later drops the rows physically. Only ids that
     * are LIVE right now count toward the meta decrement, so replayed
     * deletes are idempotent and unknown ids are no-ops.
@@ -438,11 +365,9 @@ final class Catalog(spark: SparkSession, warehouseDir: String, maxCached: Int = 
     * dataset scan.
     */
   def deadFraction(id: String): Double = {
-    val tomb = tombPath(id)
-    if (!new java.io.File(tomb).exists) return 0.0
-    val dead = spark.read.parquet(tomb).distinct().count()
-    val live = list().find(_.id == id).map(_.numPoints).getOrElse(0L)
-    if (dead + live == 0L) 0.0 else dead.toDouble / (dead + live)
+    val dead = readSidecar(tombPath(id)).fold(0L)(_.distinct().count())
+    if (dead == 0L) 0.0
+    else dead.toDouble / (dead + list().find(_.id == id).map(_.numPoints).getOrElse(0L))
   }
 
   /** Policy-driven compaction: rewrite only when the dead fraction
@@ -466,11 +391,10 @@ final class Catalog(spark: SparkSession, warehouseDir: String, maxCached: Int = 
   def compactPoints(id: String): SavedInfo = {
     val prev = savedInfo(id)
     val path = dsPath(id)
-    if (new java.io.File(tombPath(id)).exists) {
+    readSidecar(tombPath(id)).foreach { tomb =>
       val tmp = path + ".compact"
       spark.read.parquet(path)
-        .join(broadcast(spark.read.parquet(tombPath(id)).distinct()),
-          Seq("id"), "left_anti")
+        .join(broadcast(tomb.distinct()), Seq("id"), "left_anti")
         .write.mode("overwrite").option("compression", "zstd")
         .partitionBy("tile_z5")
         .parquet(tmp)
@@ -499,23 +423,17 @@ final class Catalog(spark: SparkSession, warehouseDir: String, maxCached: Int = 
   def list(): Seq[SavedInfo] = {
     val root = Paths.get(warehouseDir)
     if (!Files.isDirectory(root)) return Nil
-    val dirs = Files.list(root).iterator()
-    val out = mutable.ArrayBuffer.empty[SavedInfo]
-    while (dirs.hasNext) {
-      val p = dirs.next()
-      val meta = p.resolve("_graft_meta.json")
-      if (Files.isRegularFile(meta)) {
-        val j = Files.readString(meta)
-        def field(k: String): Option[String] =
-          j.split(s""""$k":""").drop(1).headOption
-            .map(_.split("[,}]")(0).stripPrefix("\"").stripSuffix("\""))
-        out += SavedInfo(field("id").get, field("numPoints").get.toLong,
-          field("createdAtMs").get.toLong, p.toString,
+    val dirs = Files.list(root)
+    val out = try dirs.iterator().asScala.map(_.resolve("_graft_meta.json"))
+      .filter(Files.isRegularFile(_)).map { meta =>
+        val m = readMeta(meta)
+        val p = meta.getParent.toString
+        SavedInfo(m("id").head, m("numPoints").head.toLong, m("createdAtMs").head.toLong, p,
           // older meta files predate the field — fall back to a live walk
-          field("fileSizeBytes").map(_.toLong).getOrElse(dirSize(p.toString)))
-      }
-    }
-    out.sortBy(_.id).toSeq
+          m.get("fileSizeBytes").map(_.head.toLong).getOrElse(dirSize(p)))
+      }.toVector
+    finally dirs.close()
+    out.sortBy(_.id)
   }
 
   /** S7: find one dataset by id substring (reference semantics —

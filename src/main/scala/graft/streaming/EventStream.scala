@@ -17,7 +17,7 @@ object EventStream extends Serializable {
   /** Streaming source over an events parquet directory. `readStream`
     * requires a fixed schema up front, so probe the first present file's
     * footer the same way the batch loader does
-    * ([[graft.SparkEntry.tsStoredAsNanos]]) and pick the matching read:
+    * ([[graft.SparkEntry.tsLayout]]) and pick the matching read:
     * TIMESTAMP(ns)/bare-INT64 → forced-LONG + integer ns→µs truncation;
     * TIMESTAMP(µs) (the current fixture, and what Spark itself writes) →
     * forced TIMESTAMP schema, no arithmetic. An empty source dir probes

@@ -66,55 +66,39 @@ class CatalogSpec extends SparkSpec {
     assert(cat.cachedIds == Seq("cluster-10p-t2-lru2", "cluster-10p-t2-lru1"))
   }
 
-  test("idle entries evict on next access (reference's 30-min ticker)") {
-    // idleEvictMs = -1: every previously-cached entry counts as idle on
-    // the next access (age 0 > -1) — deterministic on any machine, no
-    // sleeps (0 would race same-millisecond accesses)
-    val cat = new Catalog(spark, warehouse, maxCached = 5, idleEvictMs = -1L)
-    cat.load("cluster-10p-t2-lru1")
-    cat.load("cluster-10p-t2-lru2") // evicts idle lru1
-    assert(cat.cachedIds == Seq("cluster-10p-t2-lru2"))
-    cat.load("cluster-10p-t2-lru2") // self-access never self-evicts
-    assert(cat.cachedIds == Seq("cluster-10p-t2-lru2"))
-    // and with a generous window nothing evicts
-    val lazyCat = new Catalog(spark, warehouse, maxCached = 5, idleEvictMs = Long.MaxValue)
-    lazyCat.load("cluster-10p-t2-lru1")
-    lazyCat.load("cluster-10p-t2-lru2")
-    assert(lazyCat.cachedIds.toSet ==
-      Set("cluster-10p-t2-lru1", "cluster-10p-t2-lru2"))
-  }
-
-  test("drained frames unpersist within grace via the load-side sweep, no further evictions") {
-    import org.apache.spark.storage.StorageLevel
-    // r13 hole: draining was only reaped inside retire(), so once
-    // eviction traffic stopped the last grace-window of frames stayed
-    // persisted forever — the sweep now also runs on every load
-    val cat = new Catalog(spark, warehouse, maxCached = 1, drainGraceMs = 50L)
-    val a = cat.load("cluster-10p-t2-lru1")
-    cat.load("cluster-10p-t2-lru2") // evicts lru1 into draining
-    assert(a.storageLevel != StorageLevel.NONE,
-      "drained frame must stay persisted inside its grace window")
-    Thread.sleep(80)
-    cat.load("cluster-10p-t2-lru2") // cache hit, NOT an eviction
-    assert(a.storageLevel == StorageLevel.NONE,
-      "lapsed draining frame must unpersist on the next load, not the next eviction")
-  }
-
-  test("mutation purges same-id draining frames immediately (no stale cached-plan reuse)") {
-    import org.apache.spark.storage.StorageLevel
-    // a frame evicted just before a mutation lingers in Spark's
-    // CacheManager; cached-plan matching is path-based, so a
-    // post-mutation load would silently reuse pre-mutation blocks
-    // unless mutations purge draining entries too
-    val cat = new Catalog(spark, warehouse, maxCached = 1, drainGraceMs = Long.MaxValue)
-    val before = cat.load("cluster-10p-t2-lru1").count()
-    val a = cat.load("cluster-10p-t2-lru1")
-    cat.load("cluster-10p-t2-lru2") // evicts lru1 into draining (infinite grace)
-    assert(a.storageLevel != StorageLevel.NONE)
-    cat.append(PointGen.uniformPoints(spark, 5, Bounds.World, 99L), "cluster-10p-t2-lru1")
-    assert(a.storageLevel == StorageLevel.NONE,
-      "pre-mutation frame must leave the CacheManager at the mutation, grace or not")
-    assert(cat.load("cluster-10p-t2-lru1").count() == before + 5,
-      "post-mutation load must see the appended rows")
+  test("no stale read after a mutation: append, delete, compaction, re-save") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    // handles hold file listings, not data: every mutation must drop
+    // the held handle, so the next load re-lists and sees exactly the
+    // post-mutation rows
+    val cat = new Catalog(spark, warehouse, maxCached = 2)
+    val (id, other) = ("cluster-10p-t3-mut", "cluster-10p-t3-other")
+    cat.save(PointGen.uniformPoints(spark, 10, Bounds.World, 5L), id)
+    cat.save(PointGen.uniformPoints(spark, 10, Bounds.World, 6L), other)
+    val mutations: Seq[(String, () => Unit, Set[Long])] = Seq(
+      ("append", () => { cat.append(PointGen.uniformPoints(spark, 5, Bounds.World, 99L)
+        .withColumn("id", col("id") + 100L), id); () }, (1L to 10L).toSet ++ (101L to 105L)),
+      // the first tombstone write appends zero rows: the sidecar read
+      // must resolve whatever that write leaves
+      ("unknown-id delete", () => { cat.deletePoints(id, Seq(999L).toDF("id")); () },
+        (1L to 10L).toSet ++ (101L to 105L)),
+      ("delete", () => { cat.deletePoints(id, Seq(1L, 2L, 101L).toDF("id")); () },
+        (3L to 10L).toSet ++ (102L to 105L)),
+      ("compact", () => { cat.compactPoints(id); () }, (3L to 10L).toSet ++ (102L to 105L)),
+      ("re-save", () => { cat.save(PointGen.uniformPoints(spark, 7, Bounds.World, 7L), id); () },
+        (1L to 7L).toSet))
+    for ((name, mutate, expected) <- mutations) {
+      val held = cat.load(id)
+      cat.load(other)
+      assert(cat.cachedIds == Seq(id, other), name)
+      mutate()
+      assert(cat.cachedIds == Seq(other), s"$name must drop the held handle")
+      val fresh = cat.load(id)
+      assert(!(fresh eq held), name)
+      assert(fresh.select("id").as[Long].collect().toSet == expected, name)
+      assert(cat.cachedIds == Seq(other, id), name)
+    }
+    assert(cat.deadFraction(id) == 0.0)
   }
 }
